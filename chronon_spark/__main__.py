@@ -936,9 +936,10 @@ def cmd_expire_snapshots(spark, conf, args) -> dict:
 def cmd_compact_table(spark, conf, args) -> dict:
     """Iceberg table maintenance: rewrite_data_files (binpack compaction).
     Partitions fragmented into >= ``--min-input-files`` data files are
-    rewritten to ``--target-files`` file(s) each in one ``replace`` snapshot
-    — rows identical, old layout readable via time travel until
-    expire-snapshots reclaims it. The ops counterpart of the streaming
+    rewritten under the backfill writer's one layout rule (one file for a
+    small partition, split by measured size for a large one) in one
+    ``replace`` snapshot — rows identical, old layout readable via time
+    travel until expire-snapshots reclaims it. The ops counterpart of the streaming
     Iceberg sink and small-batch backfills, which fragment partitions."""
     from chronon_spark.sources.iceberg import compact_data_files
 
@@ -946,7 +947,6 @@ def cmd_compact_table(spark, conf, args) -> dict:
         spark,
         args.location,
         min_input_files=args.min_input_files,
-        target_files=args.target_files,
     )
     return {"location": args.location, **res}
 
@@ -1095,7 +1095,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             sp.add_argument("--location", required=True,
                             help="iceberg table root to compact")
             sp.add_argument("--min-input-files", type=int, default=2)
-            sp.add_argument("--target-files", type=int, default=1)
             continue
         sp.add_argument("--conf", required=True, help="path to a Python conf module")
         # reference run.py local mode (--local-data-path): load csv/json/jsonl

@@ -61,6 +61,7 @@ class TimeUnit(str, enum.Enum):
 
 
 _UNIT_MS = {TimeUnit.MINUTES: 60_000, TimeUnit.HOURS: 3_600_000, TimeUnit.DAYS: 86_400_000}
+DEFAULT_DECAY_CAP = 20  # TIME_DECAYED_* age cap, in halflives (see Aggregation)
 
 
 @dataclass(frozen=True)
@@ -156,7 +157,7 @@ class Aggregation:
     # 2^-decay_cap (~1e-6 at the default 20) instead of decaying further.
     # This keeps the integer-scaled sum (sum of value<<(cap-age)) inside
     # int64 — raise it only if inputs are small; 1 <= decay_cap <= 40.
-    decay_cap: int = 20
+    decay_cap: int = DEFAULT_DECAY_CAP
 
     def output_name(self, window: Window | None, bucket: str | None) -> str:
         """`{input}_{op}[{k}][_{window}][_by_{bucket}]` — reference naming
@@ -171,7 +172,7 @@ class Aggregation:
         if self.halflife is not None:
             # decayed ops with different halflives must not collide
             name += f"_hl{self.halflife.suffix}"
-            if self.decay_cap != 20:
+            if self.decay_cap != DEFAULT_DECAY_CAP:
                 # non-default caps change the value — keep names distinct too
                 name += f"_cap{self.decay_cap}"
         if window is not None:

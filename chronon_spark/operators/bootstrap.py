@@ -142,6 +142,8 @@ def label_join(
         raise ValueError(
             f"label horizon must be a positive Window; got {horizon!r}"
         )
+    if not label_gb.aggregations:
+        raise ValueError("label GroupBy must declare aggregations")
     missing = [c for c in (*label_gb.keys, time_column) if c not in features.columns]
     if missing:
         raise ValueError(

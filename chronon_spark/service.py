@@ -11,7 +11,7 @@ HTTP batch becomes ONE small request DataFrame, and the whole lambda merge
 (collapsed IRs + tail tiles + stream) runs as a single Spark plan per batch
 — so a 10k-key scoring POST costs one job, not 10k point lookups.
 
-Status mapping: unknown join/GroupBy -> 404, malformed body -> 400,
+Status mapping: ``UnknownEntityError`` (join/GroupBy) -> 404, bad body -> 400,
 ``StaleUploadError`` (uploaded IRs don't match the serving definition) ->
 503 with the re-upload remedy — the staleness guard surfaces as a 5xx
 instead of silently serving wrong features. Everything else -> 500.
@@ -38,12 +38,20 @@ from pyspark.sql import types as T
 
 from chronon_spark.online import Fetcher, StaleUploadError
 
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+class UnknownEntityError(LookupError):
+    """The requested join or GroupBy is not served here (HTTP 404)."""
+
 
 def json_safe(v):
     """Row values -> JSON-encodable (timestamps to epoch millis, Decimal to
     float, bytes base64, nested rows/maps/arrays recursively)."""
     if isinstance(v, _dt.datetime):
-        return int(v.timestamp() * 1000)
+        # integer arithmetic (float seconds * 1000 can land 1 ms low); a
+        # naive datetime is local time, as PySpark collects TIMESTAMP values
+        return (v.astimezone(_dt.timezone.utc) - _EPOCH) // _dt.timedelta(milliseconds=1)
     if isinstance(v, _dt.date):
         return v.isoformat()
     if isinstance(v, decimal.Decimal):
@@ -96,15 +104,22 @@ class FeatureService:
     def _key_types(self, parts) -> dict[str, T.DataType]:
         """Left-key column -> type, read off the verified collapsed IR
         frames (the uploaded tables are the serving-side source of truth
-        for key types; JSON numbers arrive untyped)."""
-        out: dict[str, T.DataType] = {}
+        for key types; JSON numbers arrive untyped). Parts that disagree on
+        a left key's type are a serving misconfiguration (HTTP 500)."""
+        seen: dict[str, tuple[T.DataType, str]] = {}
         for part in parts:
             gb = part.group_by
             collapsed, _tail = self.fetcher.batch_frames(gb, self.batch_end_ds)
             types = {f.name: f.dataType for f in collapsed.schema.fields}
             for lk, rk in zip(part.left_keys(), gb.keys):
-                out.setdefault(lk, types[rk])
-        return out
+                first_type, first_part = seen.setdefault(lk, (types[rk], gb.name))
+                if first_type != types[rk]:
+                    raise TypeError(
+                        f"left key '{lk}' is {first_type.simpleString()} in join part "
+                        f"'{first_part}' but {types[rk].simpleString()} in join part "
+                        f"'{gb.name}'"
+                    )
+        return {lk: t for lk, (t, _part) in seen.items()}
 
     def _requests_df(self, rows: list[dict], key_types: dict, time_column: str) -> DataFrame:
         if not isinstance(rows, list) or not rows or not all(isinstance(r, dict) for r in rows):
@@ -140,7 +155,7 @@ class FeatureService:
 
     def fetch_join_rows(self, name: str, rows: list[dict]) -> list[dict]:
         if name not in self.joins:
-            raise KeyError(f"unknown join '{name}'; serving: {sorted(self.joins)}")
+            raise UnknownEntityError(f"unknown join '{name}'; serving: {sorted(self.joins)}")
         join = self.joins[name]
         missing = [
             p.group_by.name for p in join.join_parts if p.group_by.name not in self.streams
@@ -168,7 +183,9 @@ class FeatureService:
 
     def fetch_group_by_rows(self, name: str, rows: list[dict]) -> list[dict]:
         if name not in self.group_bys:
-            raise KeyError(f"unknown GroupBy '{name}'; serving: {sorted(self.group_bys)}")
+            raise UnknownEntityError(
+                f"unknown GroupBy '{name}'; serving: {sorted(self.group_bys)}"
+            )
         gb = self.group_bys[name]
         if gb.name not in self.streams:
             raise RuntimeError(
@@ -250,8 +267,8 @@ class FeatureService:
                     self._send(200, {"results": results})
                 except (json.JSONDecodeError, ValueError) as e:
                     self._send(400, {"error": str(e)})
-                except KeyError as e:
-                    self._send(404, {"error": str(e.args[0] if e.args else e)})
+                except UnknownEntityError as e:
+                    self._send(404, {"error": str(e)})
                 except StaleUploadError as e:
                     # the staleness guard is a SERVING failure, not a client
                     # one: 503 + remedy, never silently-wrong features

@@ -22,13 +22,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (affinity- and cgroup-aware on Linux)."""
+    return len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
+
+
+def _half_ram() -> str:
+    """Half of physical RAM as a JVM heap size (Spark's own 1g off Linux): a
+    larger default lets the driver JVM outgrow the host and be OOM-killed."""
+    if not os.path.exists("/proc/meminfo"):
+        return "1g"
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{kb // 2048}m"
+
+
 def get_spark(
     app_name: str = "chronon_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
     # Python workers resolve imports from the JVM's inherited env, not the
     # driver's sys.path — export the package root BEFORE the JVM launches so
     # mapInPandas/mapInArrow closures (multimodal, serde) import
@@ -72,7 +87,7 @@ def get_spark(
         # persisted tile tables must keep reporting their hash-partitioning,
         # or every consumer re-shuffles what is already clustered
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _half_ram())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # read parquet timestamp[us] (isAdjustedToUTC=false) as TIMESTAMP_LTZ

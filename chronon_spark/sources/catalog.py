@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from chronon_spark.sources.tableio import (
     SchemaEvolutionError,
     check_schema_evolution,
-    salted_repartition,
 )
 
 
@@ -192,11 +191,9 @@ class CatalogTable:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         return df.select(*cols)
 
-    def insert_overwrite(self, df: DataFrame, n_files: int | None = None) -> None:
+    def insert_overwrite(self, df: DataFrame) -> None:
         """Dynamic partition overwrite through the catalog: replaces exactly
         the ds partitions present in ``df`` (TableUtils.scala:480-534)."""
-        if n_files:
-            df = salted_repartition(df, self.ds_col, n_files)
         if not self.exists():
             if "." in self.name:
                 db = self.name.rsplit(".", 1)[0]

@@ -859,13 +859,9 @@ class DeltaPartitionedTable:
             if os.path.exists(lin):
                 os.replace(lin, os.path.join(dest, f"{ds}.lineage.json"))
 
-    def insert_overwrite(self, df: DataFrame, n_files: int | None = None) -> None:
+    def insert_overwrite(self, df: DataFrame) -> None:
         """The tableio.insert_overwrite_partitions hook: dynamic partition
         overwrite as one Delta commit."""
-        if n_files:
-            from chronon_spark.sources.tableio import salted_repartition
-
-            df = salted_repartition(df, self.ds_col, n_files)
         if not self.exists():
             create_table(df, self.path, partition_by=[self.ds_col])
         else:

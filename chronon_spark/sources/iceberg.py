@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.serde import AvroSchema, read_ocf, write_ocf
+from chronon_spark.sources.tableio import write_layout
 
 # --- Iceberg <-> Spark type bridge (spec "Schemas and Data Types") ---------
 
@@ -1131,14 +1132,10 @@ class IcebergPartitionedTable:
             if os.path.exists(lin):
                 os.replace(lin, os.path.join(dest, f"{ds}.lineage.json"))
 
-    def insert_overwrite(self, df: DataFrame, n_files: int | None = None) -> None:
+    def insert_overwrite(self, df: DataFrame) -> None:
         """The tableio.insert_overwrite_partitions hook: dynamic partition
         overwrite as an Iceberg commit (append-only schema evolution
         enforced inside the commit)."""
-        if n_files:
-            from chronon_spark.sources.tableio import salted_repartition
-
-            df = salted_repartition(df, self.ds_col, n_files)
         if not self.exists():
             create_table(df, self.path, partition_by=[self.ds_col])
         else:
@@ -1149,12 +1146,11 @@ def compact_data_files(
     spark: SparkSession,
     location: str,
     min_input_files: int = 2,
-    target_files: int = 1,
 ) -> dict:
     """Table maintenance: rewrite_data_files (Iceberg's binpack compaction,
     public spec/procedures). Every partition holding at least
-    ``min_input_files`` data files is rewritten into ``target_files``
-    file(s) and committed as ONE ``replace`` snapshot: rewritten partitions'
+    ``min_input_files`` data files is rewritten under ``tableio.write_layout``
+    and committed as ONE ``replace`` snapshot: rewritten partitions'
     old files drop out of the new manifest set, untouched partitions carry
     forward as EXISTING entries with their original sequence numbers, and
     the previous snapshot still reads the pre-compaction files (time
@@ -1204,20 +1200,7 @@ def compact_data_files(
         df = df.withColumn(pc, F.col(pc).cast(dtypes[pc]))
     df = df.select(*[f.name for f in schema.fields])
 
-    # one shuffle task per (partition value, salt) -> `target_files` files
-    # per partition value out of the partitioned writer
-    if not part_names:
-        df = df.repartition(target_files)
-    elif target_files > 1:
-        df = (
-            df.withColumn(
-                "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(target_files))
-            )
-            .repartition(*part_names, "__salt")
-            .drop("__salt")
-        )
-    else:
-        df = df.repartition(*part_names)
+    df = write_layout(df, part_names)
 
     before_rows = sum(e["record_count"] for es in cands.values() for e in es)
     _write_snapshot(

@@ -4,10 +4,9 @@ incremental-backfill semantics (Iceberg-ready, parquet-backed in this image).
 Re-creates, Spark-first:
 - partition listing + unfilled-range computation (reference:
   spark/src/main/scala/ai/chronon/spark/TableUtils.scala:791-858)
-- dynamic-partition insert-overwrite with salted repartition + in-partition
-  sort (TableUtils.scala:480-534, 640-717 — the salt breaks hot-partition
-  write skew; we derive it deterministically instead of rand() so backfills
-  are bit-reproducible)
+- dynamic-partition insert-overwrite (TableUtils.scala:480-534) under one
+  write-layout rule, :func:`write_layout`: files per day follow the bytes
+  written, as in TableUtils.scala:673-697 — a small day is one file
 - per-partition lineage/metrics JSON + semantic-hash change detection
   (SemanticHashUtils.scala) enabling resume-from-checkpoint: a partition is
   the unit of work; present partitions with a matching semantic hash are
@@ -223,24 +222,12 @@ def cumulative_latest(
     return eligible.where(F.col(ds_col) == latest).drop(ds_col)
 
 
-def salted_repartition(df: DataFrame, ds_col: str, n_files: int) -> DataFrame:
-    """Deterministic write-salting: hash all columns into ``n_files`` salts so
-    hot partitions spread over n_files tasks/files, then sort within
-    partitions for locality (port of TableUtils.scala:640-717 semantics with
-    xxhash64 instead of rand() — reproducible output layout)."""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_files))
-    return (
-        df.withColumn("__salt", salt)
-        .repartition(n_files, F.col(ds_col), F.col("__salt"))
-        .drop("__salt")
-        .sortWithinPartitions(ds_col)
-    )
-
-
-def estimate_files_per_partition(df_rows: int, row_bytes: int = 100, target: int = 10**8) -> int:
-    """~1 file per 100M row-bytes, clamped — reference write heuristic
-    (TableUtils.scala:335,673-697; bounds widened down for local tests)."""
-    return max(1, min(2000, (df_rows * row_bytes) // target + 1))
+def write_layout(df: DataFrame, part_cols: list[str]) -> DataFrame:
+    """The one rule for how many files each partition value gets: rebalance
+    by the partition columns. AQE splits a hot value and coalesces small
+    ones by measured shuffle bytes against its advisory partition size;
+    with AQE off each value still lands in one task (one file)."""
+    return df.hint("rebalance", *part_cols)
 
 
 class SchemaEvolutionError(ValueError):
@@ -265,9 +252,7 @@ def check_schema_evolution(
     return problems
 
 
-def insert_overwrite_partitions(
-    df: DataFrame, table: "PartitionedTable", n_files: int | None = None
-) -> None:
+def insert_overwrite_partitions(df: DataFrame, table: "PartitionedTable") -> None:
     """Dynamic partition overwrite: replaces exactly the ds partitions present
     in ``df``. The conf is pinned here (runtime-settable) rather than relying
     on the session factory: with a caller-supplied SparkSession a STATIC
@@ -277,9 +262,11 @@ def insert_overwrite_partitions(
     (metadata-only footer read): new columns ok, drops/type-changes raise.
 
     Accepts either a path-backed ``PartitionedTable`` or a catalog-backed
-    ``catalog.CatalogTable`` (which owns its evolution DDL + writer)."""
+    ``catalog.CatalogTable`` (which owns its evolution DDL + writer); every
+    kind gets the one file layout, :func:`write_layout`."""
+    df = write_layout(df, [table.ds_col])
     if hasattr(table, "insert_overwrite"):
-        table.insert_overwrite(df, n_files)
+        table.insert_overwrite(df)
         return
     if table.exists() and table.partitions():
         existing = {
@@ -303,8 +290,6 @@ def insert_overwrite_partitions(
                 f"write to {table.path} rejected: " + "; ".join(problems)
             )
     df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if n_files:
-        df = salted_repartition(df, table.ds_col, n_files)
     df.write.mode("overwrite").partitionBy(table.ds_col).parquet(table.path)
 
 
@@ -316,7 +301,6 @@ def backfill(
     end_ds: str,
     semantic_hash: str = "",
     step_days: int = 30,
-    n_files: int | None = None,
 ) -> list[dict]:
     """Incremental, resumable backfill: the written partition IS the
     checkpoint (reference JoinBase.scala:348-369 range planning). Present
@@ -347,7 +331,7 @@ def backfill(
         # doubles the backfill cost)
         obs = Observation(f"backfill_{lo}_{hi}")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        insert_overwrite_partitions(out, table, n_files)
+        insert_overwrite_partitions(out, table)
         rows = obs.get["rows"]
         # the chunk is materialized: release estimator-internal cached frames
         # (tile tables, query frames) so a long chunked backfill does not

@@ -331,3 +331,6 @@ def test_label_join_fail_fast_validation(spark, events):
         label_join(feats.drop("user_id"), events, gb, Window(1, TimeUnit.DAYS))
     with _pt.raises(ValueError, match="label_events frame is missing"):
         label_join(feats, events.drop("value").drop("user_id"), gb, Window(1, TimeUnit.DAYS))
+    no_aggs = GroupBy(name="lv", keys=["user_id"], aggregations=[])
+    with _pt.raises(ValueError, match="label GroupBy must declare aggregations"):
+        label_join(feats, events, no_aggs, Window(1, TimeUnit.DAYS))

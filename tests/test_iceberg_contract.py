@@ -31,7 +31,7 @@ def table(spark, tmp_path):
         [(d, i, float(i)) for d in ds_range("2024-03-01", "2024-03-03") for i in range(4)],
         "ds string, k int, v double",
     )
-    insert_overwrite_partitions(df, t, n_files=2)
+    insert_overwrite_partitions(df, t)
     return t
 
 

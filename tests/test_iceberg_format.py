@@ -304,7 +304,7 @@ def test_adopt_hive_dir_zero_copy_import(spark, tmp_path):
 
     pt = PartitionedTable(str(tmp_path / "hive"))
     df = _df(spark)
-    insert_overwrite_partitions(df, pt, n_files=2)
+    insert_overwrite_partitions(df, pt)
     before_files = sorted(
         p for p in __import__("glob").glob(f"{pt.path}/**/*.parquet", recursive=True)
     )
@@ -441,7 +441,7 @@ def test_compact_data_files_rows_identical_fewer_files(spark, tmp_path):
     pre_files = {e["path"] for e in t.plan_scan()}
     assert len(pre_files) > 3  # genuinely fragmented
 
-    stats = compact_data_files(spark, loc, min_input_files=2, target_files=1)
+    stats = compact_data_files(spark, loc, min_input_files=2)
     assert stats["compacted_partitions"] == 3  # ds has 3 values
     assert stats["rewritten_files"] == len(pre_files)
 

@@ -6,6 +6,7 @@ staleness guard surfacing as 503, never silently-wrong features."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import subprocess
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 
 from chronon_spark.api import Aggregation, GroupBy, Join, JoinPart, Op, TimeUnit, Window
 from chronon_spark.online import Fetcher
-from chronon_spark.service import FeatureService
+from chronon_spark.service import FeatureService, json_safe
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -176,6 +177,58 @@ def test_http_error_statuses(served):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(f"{base}/nope")
     assert e.value.code == 404
+
+
+def test_json_safe_timestamps_are_exact_millis():
+    """Epoch millis by integer arithmetic: float seconds * 1000 reads this
+    instant as ...515; sub-millisecond digits truncate, never round up."""
+    utc = dt.timezone.utc
+    assert json_safe(dt.datetime(1978, 8, 10, 18, 40, 34, 516000, tzinfo=utc)) == 271622434516
+    assert json_safe(dt.datetime(2024, 3, 1, 12, 0, 0, 123999, tzinfo=utc)) == 1709294400123
+    assert json_safe(dt.datetime(1969, 12, 31, 23, 59, 59, 999000, tzinfo=utc)) == -1
+
+
+def test_internal_key_error_is_500_not_404(served, monkeypatch):
+    """Only an unknown join/GroupBy name is a 404; a KeyError raised while
+    serving a known join is a server fault."""
+    svc, base, *_ = served
+
+    def broken(parts):
+        raise KeyError("user_id")
+
+    monkeypatch.setattr(svc, "_key_types", broken)
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(f"{base}/v1/features/join/{JOIN.name}", [{"user_id": 1}])
+    assert e.value.code == 500
+    assert "KeyError" in json.loads(e.value.read())["error"]
+
+
+def test_conflicting_left_key_types_name_both_parts(spark, served, monkeypatch):
+    """Two join parts that resolve one left key to different types are a
+    serving misconfiguration: 500 naming both parts, not first-part-wins."""
+    svc, base, fetcher, stream, *_ = served
+    other = GroupBy(
+        name="svc_gb_str", keys=["user_id"],
+        aggregations=[Aggregation(Op.COUNT, "value", windows=(W1D,))],
+    )
+    real = fetcher.batch_frames
+
+    def frames(gb, ds):
+        if gb.name == other.name:
+            return spark.createDataFrame([], "user_id string"), None
+        return real(gb, ds)
+
+    monkeypatch.setattr(fetcher, "batch_frames", frames)
+    monkeypatch.setitem(svc.streams, other.name, stream)
+    monkeypatch.setitem(svc.joins, "conflict", Join(
+        name="conflict", left_keys=["user_id"],
+        join_parts=[JoinPart(group_by=GB), JoinPart(group_by=other)],
+    ))
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(f"{base}/v1/features/join/conflict", [{"user_id": 1}])
+    assert e.value.code == 500
+    err = json.loads(e.value.read())["error"]
+    assert "'svc_gb'" in err and "'svc_gb_str'" in err and "user_id" in err
 
 
 def test_stale_definition_surfaces_as_503(spark, served):

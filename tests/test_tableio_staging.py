@@ -1,8 +1,10 @@
-"""Incremental backfill, resume, salted writes, staging macros."""
+"""Incremental backfill, resume, write layout, staging macros."""
 
 from __future__ import annotations
 
+import glob
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +14,7 @@ from chronon_spark.sources.tableio import (
     backfill,
     ds_range,
     insert_overwrite_partitions,
-    salted_repartition,
+    resolve_table,
     unfilled_ranges,
 )
 from chronon_spark.staging import backfill_staging_query, render
@@ -86,16 +88,44 @@ def test_dynamic_partition_overwrite(spark, tmp_table):
     assert pruned.select("ds").distinct().count() == 2
 
 
-def test_salted_repartition_spreads_and_preserves(spark):
-    df = spark.range(1000).select(
-        F.lit("2024-01-01").alias("ds"), F.col("id").cast("int").alias("v")
-    )
-    out = salted_repartition(df, "ds", 8)
-    assert out.count() == 1000
-    n_parts = out.rdd.getNumPartitions()
-    assert n_parts == 8
-    sizes = out.rdd.glom().map(len).collect()
-    assert max(sizes) < 1000  # hot partition actually spread
+@pytest.mark.parametrize("root", ["", "iceberg:", "delta:"])
+def test_insert_overwrite_writes_one_file_per_small_ds(spark, tmp_path, root):
+    """One write layout for every table kind: a small day lands in exactly
+    one data file however many tasks produced it, and no row changes."""
+    t = resolve_table(spark, f"{root}{tmp_path}", "tbl")
+    df = _mk(spark, "2024-01-01", "2024-01-03").repartition(4)  # days span tasks
+    insert_overwrite_partitions(df, t)
+    if root:
+        file_days = [e["partition"]["ds"] for e in t.table.plan_scan()]
+    else:
+        file_days = [
+            os.path.basename(os.path.dirname(p))[len("ds="):]
+            for p in glob.glob(os.path.join(t.path, "ds=*", "*.parquet"))
+        ]
+    assert Counter(file_days) == {d: 1 for d in ds_range("2024-01-01", "2024-01-03")}
+    got = t.read(spark).select(*df.columns).collect()
+    assert sorted(got) == sorted(df.collect())
+
+
+def test_write_layout_splits_a_hot_ds_by_measured_size(spark, tmp_table):
+    """Files per day follow the measured shuffle bytes: under a small
+    advisory partition size the hot day is split over several files while
+    the small day stays one."""
+    hot = spark.range(200_000).select(F.lit("2024-01-01").alias("ds"), F.col("id").alias("v"))
+    cold = spark.range(5).select(F.lit("2024-01-02").alias("ds"), F.col("id").alias("v"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        insert_overwrite_partitions(hot.unionByName(cold).repartition(4), tmp_table)
+    finally:
+        spark.conf.set(key, default)
+
+    def n_files(d):
+        return len(glob.glob(os.path.join(tmp_table.path, f"ds={d}", "*.parquet")))
+
+    assert n_files("2024-01-01") > 1 and n_files("2024-01-02") == 1
+    assert tmp_table.read(spark).count() == 200_005
 
 
 def test_staging_macros_and_backfill(spark, tmp_path):

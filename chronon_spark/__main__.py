@@ -78,7 +78,7 @@ Conf-module contract (only the names a given subcommand needs):
                              writes the semantic-hash manifest CI gates on
                              (``--manifest-out``; exit 1 on any bad conf)
 
-    optional everywhere: ``tiebreak`` (str), ``strategy`` (str)
+    optional everywhere: ``tiebreak`` (str)
 
 Backfill-style subcommands accept ``--out-root catalog:<db>`` to write
 catalog-managed tables (sources/catalog.py) instead of parquet paths.
@@ -127,7 +127,6 @@ def cmd_join(spark, conf, args) -> dict:
         args.start_ds,
         args.end_ds,
         tiebreak=_opt(conf, "tiebreak"),
-        strategy=_opt(conf, "strategy", "auto"),
         step_days=args.step_days,
     )
     return {
@@ -234,7 +233,6 @@ def cmd_join_final(spark, conf, args) -> dict:
         spark, left, conf.sources(spark), join, args.out_root,
         args.start_ds, args.end_ds,
         tiebreak=_opt(conf, "tiebreak"),
-        strategy=_opt(conf, "strategy", "auto"),
         step_days=args.step_days,
         selected_parts=selected,
     )

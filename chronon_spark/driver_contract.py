@@ -5412,7 +5412,7 @@ def _release_before(fn):
 
     wrapped.__name__ = getattr(fn, "__name__", "q")
     wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn  # bench.py shape pins hash the ORIGINAL source
+    wrapped.__wrapped__ = fn  # inspect.unwrap reaches the ORIGINAL definition
     return wrapped
 
 

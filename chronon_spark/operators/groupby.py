@@ -669,6 +669,9 @@ def _presence_window_aligned(gb: GroupBy):
     return w_max
 
 
+STRATEGIES = ("auto", "sliding", "hops", "exact")
+
+
 def temporal_events(
     left: DataFrame,
     events: DataFrame,
@@ -683,7 +686,15 @@ def temporal_events(
     Left rows are deduplicated to distinct (keys, ts) for aggregation and
     fanned back out by an equi-join, preserving duplicate left rows
     (reference row-count preservation: JoinTest.scala:589-590).
+
+    ``strategy`` picks the estimator: ``auto`` (the default) and
+    ``sliding`` route window-function-mergeable ops to sliding tiles,
+    ``hops`` to hop tiles, ``exact`` everything to the range join.
     """
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown temporal strategy {strategy!r}; expected one of {list(STRATEGIES)}"
+        )
     assert gb.accuracy == Accuracy.TEMPORAL
     run_setups(events, gb.setups)
     ltc = left_time_column or gb.time_column

@@ -91,7 +91,6 @@ def _snapshot_part_features(
     gb,
     left_time_column: str,
     tiebreak: str | None,
-    strategy: str,
     snapshot_frame: DataFrame | None = None,
 ) -> DataFrame:
     """SNAPSHOT-accuracy features for a query frame.
@@ -133,7 +132,6 @@ def _snapshot_part_features(
         gb_t,
         left_time_column=left_time_column,
         tiebreak=tiebreak,
-        strategy=strategy,
     )
     return feat.withColumn(left_time_column, F.col("__orig_ts")).drop("__orig_ts")
 
@@ -144,7 +142,6 @@ def compute_join_part(
     part: JoinPart,
     left_time_column: str = "ts",
     tiebreak: str | None = None,
-    strategy: str = "auto",
     snapshot_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Features for one join part, keyed by the LEFT column names, with the
@@ -214,7 +211,7 @@ def compute_join_part(
         )
     elif gb.accuracy == Accuracy.TEMPORAL:
         feat = G.temporal_events(
-            q, events, gb, left_time_column=left_time_column, tiebreak=tiebreak, strategy=strategy
+            q, events, gb, left_time_column=left_time_column, tiebreak=tiebreak
         )
     else:
         # SNAPSHOT accuracy: features as of the previous midnight — the
@@ -222,7 +219,7 @@ def compute_join_part(
         # snapshot (reference JoinBase.scala:70-130), via the materialized
         # snapshot table when one is provided (materialize_join)
         feat = _snapshot_part_features(
-            q, events, gb, left_time_column, tiebreak, strategy, snapshot_frame
+            q, events, gb, left_time_column, tiebreak, snapshot_frame
         )
     prefix = part.full_prefix()
     # prefix EVERY value column — including derivation outputs, whose names
@@ -311,7 +308,6 @@ def _compute_merged_parts(
     parts: list[JoinPart],
     left_time_column: str,
     tiebreak: str | None,
-    strategy: str,
 ) -> DataFrame:
     """One temporal_events pass serving several join parts (same source,
     same key mapping): aggregations are deduplicated across parts, computed
@@ -355,8 +351,7 @@ def _compute_merged_parts(
         F.col(left_time_column),
     ).dropDuplicates([*gb0.keys, left_time_column])
     feat = G.temporal_events(
-        q, events, merged_gb, left_time_column=left_time_column,
-        tiebreak=tiebreak, strategy=strategy,
+        q, events, merged_gb, left_time_column=left_time_column, tiebreak=tiebreak
     )
     # fan shared output columns out to every part's prefixed name
     sel: list = [F.col(c) for c in gb0.keys] + [F.col(left_time_column)]
@@ -420,7 +415,6 @@ def compute_join(
     sources: dict[str, DataFrame],
     join: Join,
     tiebreak: str | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Enrich ``left`` with every join part. ``sources`` maps GroupBy name ->
     its events DataFrame. Preserves left row count (incl. duplicates).
@@ -455,11 +449,10 @@ def compute_join(
                 part,
                 left_time_column=join.time_column,
                 tiebreak=tiebreak,
-                strategy=strategy,
             )
         else:
             feat = _compute_merged_parts(
-                left, events, parts, join.time_column, tiebreak, strategy
+                left, events, parts, join.time_column, tiebreak
             )
         out = coalesced_join(out, feat, [*parts[0].left_keys(), join.time_column])
     if join.external_parts:
@@ -624,7 +617,6 @@ def materialize_join(
     start_ds: str,
     end_ds: str,
     tiebreak: str | None = None,
-    strategy: str = "auto",
     step_days: int = 30,
     selected_parts: list[str] | None = None,
 ):
@@ -767,7 +759,7 @@ def materialize_join(
                 else None
             )
             return compute_join_part(
-                q.drop("ds"), ev, part, tc, tiebreak, strategy, snapshot_frame=snap
+                q.drop("ds"), ev, part, tc, tiebreak, snapshot_frame=snap
             ).join(q.select(*part.left_keys(), tc, "ds"), [*part.left_keys(), tc])
 
         backfill(

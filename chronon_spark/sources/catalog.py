@@ -33,10 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.sources.tableio import (
-    SchemaEvolutionError,
-    check_schema_evolution,
-)
+from chronon_spark.sources.tableio import check_schema_evolution
 
 
 def _sql_str(value: str) -> str:
@@ -133,7 +130,6 @@ class CatalogTable:
             return
         safe_tag = re.sub(r"[^A-Za-z0-9_]", "_", tag)
         archive = f"{self.name}__archive_{safe_tag}"
-        in_list = ", ".join(f"'{_sql_str(d)}'" for d in ds_list)
         stale = self.read().where(F.col(self.ds_col).isin(ds_list))
         if self.spark.catalog.tableExists(archive):
             stale.write.mode("append").insertInto(archive)
@@ -148,7 +144,6 @@ class CatalogTable:
                 f"ALTER TABLE {self.name} UNSET TBLPROPERTIES IF EXISTS "
                 f"('lineage.{_sql_str(d)}')"
             )
-        _ = in_list  # (kept for symmetry with SQL-first variants)
 
     # -- writes -----------------------------------------------------------
 
@@ -167,16 +162,9 @@ class CatalogTable:
             for f in df.schema.fields
             if f.name != self.ds_col
         }
-        problems = check_schema_evolution(existing, incoming)
-        if problems:
-            raise SchemaEvolutionError(
-                f"write to {self.name} rejected: " + "; ".join(problems)
-            )
-        new_cols = [
-            (n, t) for n, t in incoming.items() if n not in existing
-        ]
+        new_cols = check_schema_evolution(existing, incoming, self.name)
         if new_cols:
-            cols_ddl = ", ".join(f"{_ident(n)} {t}" for n, t in new_cols)
+            cols_ddl = ", ".join(f"{_ident(n)} {incoming[n]}" for n in new_cols)
             self.spark.sql(f"ALTER TABLE {self.name} ADD COLUMNS ({cols_ddl})")
 
     def _aligned(self, df: DataFrame) -> DataFrame:

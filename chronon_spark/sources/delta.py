@@ -1,12 +1,6 @@
 """Delta Lake table format, implemented purely from the public protocol spec
 (github.com/delta-io/delta PROTOCOL.md) — no delta-spark jar, no delta-rs.
-
-The reference platform treats the warehouse format as pluggable
-(``TableUtils.scala:104-282`` detects hive/iceberg/delta providers per
-table); this repo ships BOTH open formats executable without jars:
-``sources/iceberg.py`` (Avro manifests) and this module (JSON transaction
-log). Everything here is the spec's storage contract, re-expressed for the
-engine's needs:
+The spec's storage contract, re-expressed for the engine's needs:
 
 - ``_delta_log/%020d.json`` commit files, one JSON action per line
   (``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``commitInfo``),
@@ -15,10 +9,8 @@ engine's needs:
   the spec's optimistic concurrency).
 - per-file ``stats`` JSON (numRecords / minValues / maxValues / nullCount)
   harvested from parquet footers at commit time — no data re-scan.
-- metadata-only scan planning: ``partitionValues`` prune partition filters,
-  stats bounds prune value filters, both conservatively (a file is dropped
-  only when no row can match). At 100TB this is the difference between
-  opening every footer and reading three JSON files.
+- metadata-only scan planning: ``partitionValues`` and stats bounds prune
+  files before Spark opens any footer.
 - classic checkpoints (``%020d.checkpoint.parquet`` + ``_last_checkpoint``)
   every N commits, so log replay cost stays O(N) regardless of table age;
   the reader starts from the newest checkpoint at or below the requested
@@ -28,11 +20,9 @@ engine's needs:
   (new ``metaData`` action; drops/retypes raise), and ``vacuum`` honoring
   tombstone retention.
 
-``DeltaPartitionedTable`` adapts the format to the PartitionedTable duck
-(sources/tableio.py) exactly like ``IcebergPartitionedTable`` does, so
-``delta:<root>`` output roots run the full incremental backfill — resume,
-lineage sidecars, semantic-hash invalidation (archive = remove-commit;
-the data stays readable via time travel).
+The day-partitioned table contract and the scan/write helpers shared with
+Iceberg live in sources/tableio.py; ``DeltaPartitionedTable`` supplies only
+the Delta commits behind a ``delta:<root>`` output root.
 """
 
 from __future__ import annotations
@@ -43,8 +33,17 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from chronon_spark.sources.tableio import (
+    MetadataPartitionedTable,
+    _list_parquet,
+    append_files,
+    check_filters,
+    check_schema_evolution,
+    file_may_match,
+    read_files,
+)
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 CHECKPOINT_INTERVAL = 10  # delta.checkpointInterval default
@@ -178,29 +177,6 @@ def _file_stats_json(path: str, schema: T.StructType) -> str:
 
 
 # --- schema -------------------------------------------------------------------
-
-
-def _merge_schema(prior: T.StructType, new: T.StructType) -> T.StructType:
-    """Append-only evolution (the repo-wide contract,
-    tableio.check_schema_evolution): new columns append as nullable;
-    dropped or retyped columns raise."""
-    prior_by = {f.name: f for f in prior.fields}
-    got = {f.name: f for f in new.fields}
-    dropped = sorted(n for n in prior_by if n not in got)
-    retyped = sorted(
-        n for n, f in got.items()
-        if n in prior_by and prior_by[n].dataType != f.dataType
-    )
-    if dropped or retyped:
-        raise ValueError(
-            f"append schema mismatch: dropped columns {dropped}, retyped "
-            f"columns {retyped} — evolution is append-only"
-        )
-    fields = list(prior.fields)
-    for f in new.fields:
-        if f.name not in prior_by:
-            fields.append(T.StructField(f.name, f.dataType, nullable=True))
-    return T.StructType(fields)
 
 
 # --- the table ---------------------------------------------------------------
@@ -365,21 +341,6 @@ class DeltaTable:
 
     # -- planning --
 
-    @staticmethod
-    def _cmp_match(op: str, lo, hi, v) -> bool:
-        """Can any value in [lo, hi] satisfy (x op v)? None bound = unknown."""
-        if op == "=":
-            return (lo is None or lo <= v) and (hi is None or hi >= v)
-        if op == "<":
-            return lo is None or lo < v
-        if op == "<=":
-            return lo is None or lo <= v
-        if op == ">":
-            return hi is None or hi > v
-        if op == ">=":
-            return hi is None or hi >= v
-        return True
-
     def plan_scan(
         self,
         filters: list[tuple] | None = None,
@@ -394,12 +355,7 @@ class DeltaTable:
         schema = T.StructType.fromJson(json.loads(snap["metadata"]["schemaString"]))
         by_name = {f.name: f.dataType for f in schema.fields}
         pcols = snap["metadata"]["partitionColumns"]
-        filters = filters or []
-        for col, op, _ in filters:
-            if col not in by_name:
-                raise ValueError(f"unknown filter column {col!r}; have {sorted(by_name)}")
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"unsupported filter op {op!r}")
+        filters = check_filters(filters, by_name)
         audit = {"files_total": len(snap["files"]), "files_kept": 0}
         out = []
         for a in snap["files"].values():
@@ -408,20 +364,8 @@ class DeltaTable:
                 for c in pcols
             }
             stats = json.loads(a["stats"]) if a.get("stats") else {}
-            keep = True
-            for col, op, val in filters:
-                if col in pcols:
-                    pv = part.get(col)
-                    if pv is None:
-                        continue  # null partition: keep conservatively
-                    lo = hi = pv
-                else:
-                    lo = stats.get("minValues", {}).get(col)
-                    hi = stats.get("maxValues", {}).get(col)
-                if not self._cmp_match(op, lo, hi, val):
-                    keep = False
-                    break
-            if not keep:
+            lo, hi = stats.get("minValues", {}), stats.get("maxValues", {})
+            if not file_may_match(filters, part, lambda c: (lo.get(c), hi.get(c))):
                 continue
             audit["files_kept"] += 1
             out.append(
@@ -445,31 +389,17 @@ class DeltaTable:
         version: int | None = None,
         _audit: dict | None = None,
     ) -> DataFrame:
-        """Plan from the log, read only surviving files, apply filters
-        EXACTLY (planning prunes I/O, filters own correctness)."""
+        """Plan from the log, read only surviving files, apply the filters
+        exactly (tableio.read_files)."""
         entries = self.plan_scan(filters=filters, version=version, _audit=_audit)
-        schema = self.spark_schema(version)
-        cols = [f.name for f in schema.fields]
-        if not entries:
-            return spark.createDataFrame([], schema)
-        df = (
-            spark.read.option("basePath", self.location)
-            # files written before an append-only evolution lack new columns
-            .option("mergeSchema", "true")
-            .parquet(*[e["path"] for e in entries])
+        return read_files(
+            spark,
+            entries,
+            self.spark_schema(version),
+            self.location,
+            self.partition_columns(version),
+            filters,
         )
-        for f in schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        for pc in self.partition_columns(version):  # path inference may retype
-            df = df.withColumn(pc, F.col(pc).cast(dtypes[pc]))
-        import operator as _o
-
-        ops = {"=": _o.eq, "<": _o.lt, "<=": _o.le, ">": _o.gt, ">=": _o.ge}
-        for col, op, val in filters or []:
-            df = df.where(ops[op](F.col(col), F.lit(val)))
-        return df.select(*cols)
 
     # -- committing --
 
@@ -582,17 +512,6 @@ class DeltaTable:
 # --- write paths --------------------------------------------------------------
 
 
-def _list_parquet(root: str) -> list[str]:
-    files = []
-    for dirpath, _dirs, names in os.walk(root):
-        if "_delta_log" in dirpath.split(os.sep):
-            continue
-        for n in names:
-            if n.endswith(".parquet"):
-                files.append(os.path.join(dirpath, n))
-    return sorted(files)
-
-
 def _adds_for(
     location: str, new_files: list[str], pcols: list[str], schema: T.StructType
 ) -> list[dict]:
@@ -624,15 +543,6 @@ def _adds_for(
     return adds
 
 
-def _write_data(df: DataFrame, location: str, pcols: list[str]) -> list[str]:
-    before = set(_list_parquet(location)) if os.path.isdir(location) else set()
-    writer = df.write.mode("append")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(location)
-    return [p for p in _list_parquet(location) if p not in before]
-
-
 def create_table(
     df: DataFrame, location: str, partition_by: list[str] | None = None
 ) -> DeltaTable:
@@ -640,7 +550,7 @@ def create_table(
     if t.exists():
         raise FileExistsError(f"Delta table already exists: {location}")
     pcols = list(partition_by or [])
-    new_files = _write_data(df, location, pcols)
+    new_files = append_files(df, location, pcols)
     md = {
         "metaData": {
             "id": str(uuid.uuid4()),
@@ -660,43 +570,28 @@ def create_table(
     return t
 
 
-def append(df: DataFrame, location: str) -> DeltaTable:
-    """Blind append; append-only schema evolution rides a new metaData
-    action in the same commit."""
-    t = DeltaTable(location)
-    snap = t.snapshot()
+def _evolve(location: str, snap: dict, df: DataFrame) -> list[dict]:
+    """The metaData action an append-only schema evolution needs (none when
+    the columns are unchanged): new columns append as nullable; drops and
+    retypes raise before any write (tableio.check_schema_evolution)."""
     prior = T.StructType.fromJson(json.loads(snap["metadata"]["schemaString"]))
-    merged = _merge_schema(prior, df.schema)
-    pcols = snap["metadata"]["partitionColumns"]
-    new_files = _write_data(df, location, pcols)
-    actions: list[dict] = []
-    if [f.name for f in merged.fields] != [f.name for f in prior.fields]:
-        actions.append(
-            {"metaData": {**snap["metadata"], "schemaString": merged.json()}}
-        )
-    actions += _adds_for(location, new_files, pcols, df.schema)
-    t._commit(actions, op="WRITE", params={"mode": "Append"})
-    return t
+    new_cols = check_schema_evolution(
+        {f.name: f.dataType.simpleString() for f in prior.fields},
+        {f.name: f.dataType.simpleString() for f in df.schema.fields},
+        location,
+    )
+    if not new_cols:
+        return []
+    added = [T.StructField(n, df.schema[n].dataType, nullable=True) for n in new_cols]
+    merged = T.StructType([*prior.fields, *added])
+    return [{"metaData": {**snap["metadata"], "schemaString": merged.json()}}]
 
 
-def overwrite_partitions(df: DataFrame, location: str) -> DeltaTable:
-    """Dynamic partition overwrite: ONE commit whose remove tombstones cover
-    every prior file in the partitions the new data touches — the previous
-    version still reads them (time travel)."""
-    t = DeltaTable(location)
-    snap = t.snapshot()
-    prior = T.StructType.fromJson(json.loads(snap["metadata"]["schemaString"]))
-    merged = _merge_schema(prior, df.schema)
-    pcols = snap["metadata"]["partitionColumns"]
-    if not pcols:
-        raise ValueError("overwrite_partitions needs a partitioned table")
-    new_files = _write_data(df, location, pcols)
-    adds = _adds_for(location, new_files, pcols, df.schema)
-    touched = {
-        tuple(a["add"]["partitionValues"].get(c) for c in pcols) for a in adds
-    }
+def _removes(snap: dict, pcols: list[str], parts: set[tuple]) -> list[dict]:
+    """remove tombstones for every live file in the partition tuples
+    ``parts`` (serialized partition values)."""
     now = _now_ms()
-    removes = [
+    return [
         {
             "remove": {
                 "path": a["path"],
@@ -708,15 +603,40 @@ def overwrite_partitions(df: DataFrame, location: str) -> DeltaTable:
             }
         }
         for a in snap["files"].values()
-        if tuple((a.get("partitionValues") or {}).get(c) for c in pcols) in touched
+        if tuple((a.get("partitionValues") or {}).get(c) for c in pcols) in parts
     ]
-    actions: list[dict] = []
-    if [f.name for f in merged.fields] != [f.name for f in prior.fields]:
-        actions.append(
-            {"metaData": {**snap["metadata"], "schemaString": merged.json()}}
-        )
+
+
+def append(df: DataFrame, location: str) -> DeltaTable:
+    """Blind append; append-only schema evolution rides a new metaData
+    action in the same commit."""
+    t = DeltaTable(location)
+    snap = t.snapshot()
+    evolve = _evolve(location, snap, df)
+    pcols = snap["metadata"]["partitionColumns"]
+    new_files = append_files(df, location, pcols)
+    adds = _adds_for(location, new_files, pcols, df.schema)
+    t._commit(evolve + adds, op="WRITE", params={"mode": "Append"})
+    return t
+
+
+def overwrite_partitions(df: DataFrame, location: str) -> DeltaTable:
+    """Dynamic partition overwrite: ONE commit whose remove tombstones cover
+    every prior file in the partitions the new data touches — the previous
+    version still reads them (time travel)."""
+    t = DeltaTable(location)
+    snap = t.snapshot()
+    evolve = _evolve(location, snap, df)
+    pcols = snap["metadata"]["partitionColumns"]
+    if not pcols:
+        raise ValueError("overwrite_partitions needs a partitioned table")
+    new_files = append_files(df, location, pcols)
+    adds = _adds_for(location, new_files, pcols, df.schema)
+    touched = {
+        tuple(a["add"]["partitionValues"].get(c) for c in pcols) for a in adds
+    }
     t._commit(
-        actions + removes + adds,
+        evolve + _removes(snap, pcols, touched) + adds,
         op="WRITE",
         params={"mode": "Overwrite", "partitionBy": json.dumps(pcols)},
     )
@@ -730,22 +650,7 @@ def remove_partitions(location: str, parts: list[dict], tag: str = "") -> DeltaT
     snap = t.snapshot()
     pcols = snap["metadata"]["partitionColumns"]
     want = {tuple(_part_str(p.get(c)) for c in pcols) for p in parts}
-    now = _now_ms()
-    removes = [
-        {
-            "remove": {
-                "path": a["path"],
-                "deletionTimestamp": now,
-                "dataChange": True,
-                "extendedFileMetadata": True,
-                "partitionValues": a.get("partitionValues", {}),
-                "size": a.get("size"),
-            }
-        }
-        for a in snap["files"].values()
-        if tuple((a.get("partitionValues") or {}).get(c) for c in pcols) in want
-    ]
-    t._commit(removes, op="DELETE", params={"archiveTag": tag} if tag else {})
+    t._commit(_removes(snap, pcols, want), op="DELETE", params={"archiveTag": tag} if tag else {})
     return t
 
 
@@ -783,86 +688,21 @@ def vacuum(location: str, retain_hours: float = 168.0) -> dict:
     return {"deleted_files": len(deleted), "retained_live": len(live)}
 
 
-# --- PartitionedTable adapter ---------------------------------------------------
+# --- table adapter -----------------------------------------------------------
 
 
-class DeltaPartitionedTable:
-    """PartitionedTable-duck adapter: plugs the Delta format into the repo's
-    incremental-backfill machinery (resume, lineage, semantic-hash
-    invalidation) exactly like IcebergPartitionedTable. Reachable as an
-    output root via ``resolve_table(..., "delta:<root>", name)``."""
+class DeltaPartitionedTable(MetadataPartitionedTable):
+    """The ``delta:`` output root (tableio.MetadataPartitionedTable): every
+    write is one log commit, and archive is a tombstone-only commit, so the
+    files stay readable via time travel until vacuum's retention passes."""
 
-    def __init__(self, location: str, ds_col: str = "ds"):
-        self.path = location
-        self.ds_col = ds_col
-        self.table = DeltaTable(location)
+    format_table = DeltaTable
 
-    def exists(self) -> bool:
-        return self.table.exists()
+    def create_table(self, df: DataFrame) -> None:
+        create_table(df, self.path, partition_by=[self.ds_col])
 
-    def partitions(self) -> list[str]:
-        if not self.exists():
-            return []
-        return sorted(
-            {
-                p[self.ds_col]
-                for p in self.table.partitions()
-                if p.get(self.ds_col) is not None
-            }
-        )
+    def overwrite_partitions(self, df: DataFrame) -> None:
+        overwrite_partitions(df, self.path)
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self.table.scan(spark)
-
-    def read_range(self, spark: SparkSession, start_ds: str, end_ds: str) -> DataFrame:
-        """Partition-pruned via log metadata, not directory globbing."""
-        return self.table.scan(
-            spark,
-            filters=[(self.ds_col, ">=", start_ds), (self.ds_col, "<=", end_ds)],
-        )
-
-    # -- lineage: same JSON sidecar contract as PartitionedTable ----------
-
-    def _lineage_dir(self) -> str:
-        return os.path.join(self.path, "_lineage")
-
-    def lineage(self, ds: str) -> dict | None:
-        p = os.path.join(self._lineage_dir(), f"{ds}.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def write_lineage(self, ds: str, meta: dict) -> None:
-        os.makedirs(self._lineage_dir(), exist_ok=True)
-        with open(os.path.join(self._lineage_dir(), f"{ds}.json"), "w") as f:
-            json.dump(meta, f, sort_keys=True)
-
-    # -- writes ------------------------------------------------------------
-
-    def archive_partitions(self, ds_list: list[str], tag: str) -> None:
-        """Semantic-hash invalidation: a tombstone-only commit drops the
-        stale partitions from the head version; the files stay on disk,
-        readable via time travel, until vacuum's retention passes."""
-        if not ds_list or not self.exists():
-            return
-        if self.table.partition_columns() != [self.ds_col]:
-            raise ValueError(
-                f"archive_partitions expects a [{self.ds_col}]-partitioned "
-                f"table; have {self.table.partition_columns()}"
-            )
+    def drop_partitions(self, ds_list: list[str], tag: str) -> None:
         remove_partitions(self.path, [{self.ds_col: d} for d in ds_list], tag=tag)
-        dest = os.path.join(self.path, "_archive", tag)
-        os.makedirs(dest, exist_ok=True)
-        for ds in ds_list:
-            lin = os.path.join(self._lineage_dir(), f"{ds}.json")
-            if os.path.exists(lin):
-                os.replace(lin, os.path.join(dest, f"{ds}.lineage.json"))
-
-    def insert_overwrite(self, df: DataFrame) -> None:
-        """The tableio.insert_overwrite_partitions hook: dynamic partition
-        overwrite as one Delta commit."""
-        if not self.exists():
-            create_table(df, self.path, partition_by=[self.ds_col])
-        else:
-            overwrite_partitions(df, self.path)

@@ -22,15 +22,14 @@ sources/tableio.py hive layout):
   data, and partition/min-max pruning happens before the first executor
   task launches.
 - snapshots: appends preserve prior manifests under spec sequence numbers;
-  ``scan(snapshot_id=...)`` time-travels; ``partitions()`` lists partitions
-  from metadata (reference TableUtils.scala:223-247 reads Iceberg partition
-  listings from table metadata for the same reason — never from the
-  filesystem).
+  ``scan(snapshot_id=...)`` time-travels; ``partitions()`` reads partition
+  tuples from the manifests.
 
-Scope: primitive column types, identity partitioning, append-only commits
-(no delete files / row-level deletes); the repo's overwrite semantics stay
-with sources/tableio.py. Reference parity: TableUtils.scala:104-282
-(provider detection, partition listing), api's tableProperties plumbing.
+Scope: primitive column types, identity partitioning, no delete files or
+row-level deletes. The day-partitioned table contract and the scan/write
+helpers shared with Delta live in sources/tableio.py;
+``IcebergPartitionedTable`` supplies only the Iceberg commits behind an
+``iceberg:<root>`` output root.
 """
 
 from __future__ import annotations
@@ -42,11 +41,20 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.serde import AvroSchema, read_ocf, write_ocf
-from chronon_spark.sources.tableio import write_layout
+from chronon_spark.sources.tableio import (
+    MetadataPartitionedTable,
+    _cmp_match,
+    _list_parquet,
+    append_files,
+    check_filters,
+    check_schema_evolution,
+    file_may_match,
+    read_files,
+    write_layout,
+)
 
 # --- Iceberg <-> Spark type bridge (spec "Schemas and Data Types") ---------
 
@@ -413,12 +421,7 @@ class IcebergTable:
         }
         spec = md["partition-specs"][md["default-spec-id"]]
         part_names = [pf["name"] for pf in spec["fields"]]
-        filters = filters or []
-        for col, op, _ in filters:
-            if col not in ice_fields:
-                raise ValueError(f"unknown filter column {col!r}; have {sorted(ice_fields)}")
-            if op not in ("=", "<", "<=", ">", ">="):
-                raise ValueError(f"unsupported filter op {op!r}")
+        filters = check_filters(filters, ice_fields)
 
         manifests, _ = read_ocf(snap["manifest-list"])
         audit = {"manifests_total": len(manifests), "manifests_read": 0,
@@ -436,7 +439,7 @@ class IcebergTable:
                 audit["files_total"] += 1
                 dfile = e["data_file"]
                 part = dict(dfile["partition"])
-                if not self._entry_may_match(dfile, part, filters, part_names, ice_fields):
+                if not self._entry_may_match(dfile, part, filters, ice_fields):
                     continue
                 audit["files_kept"] += 1
                 entries.append(
@@ -450,21 +453,6 @@ class IcebergTable:
         if _audit is not None:
             _audit.update(audit)
         return entries
-
-    @staticmethod
-    def _cmp_match(op: str, lo, hi, v) -> bool:
-        """Can any value in [lo, hi] satisfy (x op v)? None bound = unknown."""
-        if op == "=":
-            return (lo is None or lo <= v) and (hi is None or hi >= v)
-        if op == "<":
-            return lo is None or lo < v
-        if op == "<=":
-            return lo is None or lo <= v
-        if op == ">":
-            return hi is None or hi > v
-        if op == ">=":
-            return hi is None or hi >= v
-        return True
 
     def _manifest_may_match(self, mf, part_filters, part_names, ice_fields) -> bool:
         """Manifest-list partition summaries (field_summary per partition
@@ -481,27 +469,20 @@ class IcebergTable:
             t = ice_fields[col]["type"]
             lo = _single_value_parse(t, s.get("lower_bound"))
             hi = _single_value_parse(t, s.get("upper_bound"))
-            if not self._cmp_match(op, lo, hi, val):
+            if not _cmp_match(op, lo, hi, val):
                 return False
         return True
 
-    def _entry_may_match(self, dfile, part, filters, part_names, ice_fields) -> bool:
+    @staticmethod
+    def _entry_may_match(dfile, part, filters, ice_fields) -> bool:
         lowers = {kv["key"]: kv["value"] for kv in (dfile.get("lower_bounds") or [])}
         uppers = {kv["key"]: kv["value"] for kv in (dfile.get("upper_bounds") or [])}
-        for col, op, val in filters:
-            t = ice_fields[col]["type"]
-            if col in part_names:
-                pv = part.get(col)
-                if pv is None:
-                    continue  # null partition: only provable for '=', keep conservatively
-                lo = hi = pv
-            else:
-                fid = ice_fields[col]["id"]
-                lo = _single_value_parse(t, lowers.get(fid))
-                hi = _single_value_parse(t, uppers.get(fid))
-            if not self._cmp_match(op, lo, hi, val):
-                return False
-        return True
+
+        def bounds(col):
+            fid, t = ice_fields[col]["id"], ice_fields[col]["type"]
+            return _single_value_parse(t, lowers.get(fid)), _single_value_parse(t, uppers.get(fid))
+
+        return file_may_match(filters, part, bounds)
 
     # -- reading --
 
@@ -513,31 +494,11 @@ class IcebergTable:
         _audit: dict | None = None,
     ) -> DataFrame:
         """Plan from metadata, read only surviving files, apply the filters
-        EXACTLY (planning prunes I/O; correctness never depends on stats)."""
+        exactly (tableio.read_files)."""
         entries = self.plan_scan(filters=filters, snapshot_id=snapshot_id, _audit=_audit)
-        schema = self.spark_schema()
-        cols = [f.name for f in schema.fields]
-        if not entries:
-            return spark.createDataFrame([], schema)
-        df = (
-            spark.read.option("basePath", self.data_dir)
-            # mergeSchema: files written before an append-only schema
-            # evolution lack the new columns; the union schema surfaces them
-            .option("mergeSchema", "true")
-            .parquet(*[e["path"] for e in entries])
+        return read_files(
+            spark, entries, self.spark_schema(), self.data_dir, self.partition_columns(), filters
         )
-        for f in schema.fields:  # pad columns no surviving file carries yet
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        for pc in self.partition_columns():  # path inference may retype; restore
-            df = df.withColumn(pc, F.col(pc).cast(dtypes[pc]))
-        import operator as _o
-
-        ops = {"=": _o.eq, "<": _o.lt, "<=": _o.le, ">": _o.gt, ">=": _o.ge}
-        for col, op, val in filters or []:
-            df = df.where(ops[op](F.col(col), F.lit(val)))
-        return df.select(*cols)
 
 
 # --- stats from parquet footers (no data scan) ------------------------------
@@ -590,15 +551,6 @@ def _bounds_kv(vals: dict[int, object], ice_by_id: dict[int, str]) -> list[dict]
 # --- writing ----------------------------------------------------------------
 
 
-def _list_parquet(root: str) -> list[str]:
-    files = []
-    for dirpath, _dirs, names in os.walk(root):
-        for n in names:
-            if n.endswith(".parquet"):
-                files.append(os.path.join(dirpath, n))
-    return sorted(files)
-
-
 def _partition_of_path(path: str, data_dir: str, part_fields: list[dict]):
     """Identity transform: partition values verbatim in the hive path."""
     rel = os.path.relpath(path, data_dir)
@@ -630,19 +582,10 @@ def _evolve_schema(md: dict | None, schema: T.StructType) -> dict:
     if md is None:
         return _iceberg_schema(schema)
     prior = md["schemas"][md["current-schema-id"]]
-    prior_by_name = {f["name"]: f for f in prior["fields"]}
     got = {f.name: _iceberg_type(f.dataType, f.name) for f in schema.fields}
-    dropped = sorted(n for n in prior_by_name if n not in got)
-    retyped = sorted(
-        n for n, t in got.items()
-        if n in prior_by_name and prior_by_name[n]["type"] != t
+    new_cols = check_schema_evolution(
+        {f["name"]: f["type"] for f in prior["fields"]}, got, md["location"]
     )
-    if dropped or retyped:
-        raise ValueError(
-            f"append schema mismatch: dropped columns {dropped}, retyped "
-            f"columns {retyped} — evolution is append-only"
-        )
-    new_cols = [f.name for f in schema.fields if f.name not in prior_by_name]
     if not new_cols:
         return prior
     next_id = md["last-column-id"]
@@ -695,12 +638,7 @@ def _write_snapshot(
     if adopt is not None:
         new_files = adopt[0]
     elif df is not None:
-        before = set(_list_parquet(data_dir)) if os.path.isdir(data_dir) else set()
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        new_files = [p for p in _list_parquet(data_dir) if p not in before]
+        new_files = append_files(df, data_dir, partition_by)
 
     snapshot_id = uuid.uuid4().int % (1 << 62)
     seq = (md.get("last-sequence-number", 0) if md else 0) + 1
@@ -901,8 +839,7 @@ def append(df: DataFrame, location: str) -> IcebergTable:
     readable (time travel)."""
     table = IcebergTable(location)
     md = table.metadata()  # raises if absent
-    spec = md["partition-specs"][md["default-spec-id"]]
-    return _write_snapshot(table, df, [pf["name"] for pf in spec["fields"]], md)
+    return _write_snapshot(table, df, table.partition_columns(), md)
 
 
 def adopt_hive_dir(
@@ -964,10 +901,8 @@ def overwrite_partitions(df: DataFrame, location: str) -> IcebergTable:
     still reads the replaced data (time travel). Schema evolution is
     append-only (_evolve_schema)."""
     table = IcebergTable(location)
-    md = table.metadata()
-    spec = md["partition-specs"][md["default-spec-id"]]
     return _write_snapshot(
-        table, df, [pf["name"] for pf in spec["fields"]], md, operation="overwrite"
+        table, df, table.partition_columns(), table.metadata(), operation="overwrite"
     )
 
 
@@ -1037,85 +972,25 @@ def expire_snapshots(
     }
 
 
-class IcebergPartitionedTable:
-    """PartitionedTable-duck adapter (sources/tableio.py): plugs the
-    iceberg-py format into the repo's incremental-backfill machinery —
-    ``backfill()``, ``insert_overwrite_partitions`` (via the
-    ``insert_overwrite`` hook), resume, and semantic-hash invalidation all
-    work unchanged. Partition listing and range reads go through table
-    METADATA (never a filesystem walk); every write is a snapshot commit, so
-    'archive' is the Iceberg-native one: replaced partitions stay readable
-    via time travel while vanishing from the current snapshot. Reachable as
-    an output root via ``resolve_table(..., "iceberg:<root>", name)``."""
+class IcebergPartitionedTable(MetadataPartitionedTable):
+    """The ``iceberg:`` output root (tableio.MetadataPartitionedTable): every
+    write is a snapshot commit, and archive is a metadata-only ``delete``
+    snapshot, so replaced partitions stay readable via time travel."""
 
-    def __init__(self, location: str, ds_col: str = "ds"):
-        self.path = location
-        self.ds_col = ds_col
-        self.table = IcebergTable(location)
+    format_table = IcebergTable
 
-    def exists(self) -> bool:
-        return self.table.exists()
+    def create_table(self, df: DataFrame) -> None:
+        create_table(df, self.path, partition_by=[self.ds_col])
 
-    def partitions(self) -> list[str]:
-        if not self.exists():
-            return []
-        return sorted(
-            {
-                p[self.ds_col]
-                for p in self.table.partitions()
-                if p.get(self.ds_col) is not None
-            }
-        )
+    def overwrite_partitions(self, df: DataFrame) -> None:
+        overwrite_partitions(df, self.path)
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self.table.scan(spark)
-
-    def read_range(self, spark: SparkSession, start_ds: str, end_ds: str) -> DataFrame:
-        """Partition-pruned via manifest metadata, not directory globbing."""
-        return self.table.scan(
-            spark,
-            filters=[(self.ds_col, ">=", start_ds), (self.ds_col, "<=", end_ds)],
-        )
-
-    # -- lineage: same JSON sidecar contract as PartitionedTable ----------
-
-    def _lineage_dir(self) -> str:
-        return os.path.join(self.path, "_lineage")
-
-    def lineage(self, ds: str) -> dict | None:
-        p = os.path.join(self._lineage_dir(), f"{ds}.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def write_lineage(self, ds: str, meta: dict) -> None:
-        os.makedirs(self._lineage_dir(), exist_ok=True)
-        with open(os.path.join(self._lineage_dir(), f"{ds}.json"), "w") as f:
-            json.dump(meta, f, sort_keys=True)
-
-    # -- writes ------------------------------------------------------------
-
-    def archive_partitions(self, ds_list: list[str], tag: str) -> None:
-        """Semantic-hash invalidation (reference JoinBase.scala:60-68):
-        a metadata-only DELETE commit drops the stale partitions from the
-        current snapshot; the data files stay on disk, reachable through the
-        parent snapshot — Iceberg time travel IS the archive."""
-        if not ds_list or not self.exists():
-            return
-        md = self.table.metadata()
-        spec = md["partition-specs"][md["default-spec-id"]]
-        pnames = [pf["name"] for pf in spec["fields"]]
-        if pnames != [self.ds_col]:
-            raise ValueError(
-                f"archive_partitions expects a [{self.ds_col}]-partitioned "
-                f"table; spec has {pnames}"
-            )
+    def drop_partitions(self, ds_list: list[str], tag: str) -> None:
         _write_snapshot(
             self.table,
             None,
-            pnames,
-            md,
+            [self.ds_col],
+            self.table.metadata(),
             operation="delete",
             replace_partitions={(d,) for d in ds_list},
             summary_extra={
@@ -1123,23 +998,6 @@ class IcebergPartitionedTable:
                 "deleted-partitions": ",".join(sorted(ds_list)),
             },
         )
-        # lineage sidecars move aside like the parquet table's, so stale
-        # hashes can't resurrect
-        dest = os.path.join(self.path, "_archive", tag)
-        os.makedirs(dest, exist_ok=True)
-        for ds in ds_list:
-            lin = os.path.join(self._lineage_dir(), f"{ds}.json")
-            if os.path.exists(lin):
-                os.replace(lin, os.path.join(dest, f"{ds}.lineage.json"))
-
-    def insert_overwrite(self, df: DataFrame) -> None:
-        """The tableio.insert_overwrite_partitions hook: dynamic partition
-        overwrite as an Iceberg commit (append-only schema evolution
-        enforced inside the commit)."""
-        if not self.exists():
-            create_table(df, self.path, partition_by=[self.ds_col])
-        else:
-            overwrite_partitions(df, self.path)
 
 
 def compact_data_files(
@@ -1168,10 +1026,7 @@ def compact_data_files(
     Returns {compacted_partitions, rewritten_files, added_files, rows}.
     """
     table = IcebergTable(location)
-    md = table.metadata()
-    spec = md["partition-specs"][md["default-spec-id"]]
-    part_names = [pf["name"] for pf in spec["fields"]]
-
+    part_names = table.partition_columns()
     groups: dict[tuple, list[dict]] = {}
     for e in table.plan_scan():
         pt = tuple(e["partition"].get(n) for n in part_names)
@@ -1185,24 +1040,11 @@ def compact_data_files(
             "rows": 0,
         }
 
-    paths = [e["path"] for es in cands.values() for e in es]
-    schema = table.spark_schema()
-    df = (
-        spark.read.option("basePath", table.data_dir)
-        .option("mergeSchema", "true")
-        .parquet(*paths)
-    )
-    for f in schema.fields:
-        if f.name not in df.columns:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    for pc in part_names:
-        df = df.withColumn(pc, F.col(pc).cast(dtypes[pc]))
-    df = df.select(*[f.name for f in schema.fields])
-
+    entries = [e for es in cands.values() for e in es]
+    df = read_files(spark, entries, table.spark_schema(), table.data_dir, part_names)
     df = write_layout(df, part_names)
 
-    before_rows = sum(e["record_count"] for es in cands.values() for e in es)
+    before_rows = sum(e["record_count"] for e in entries)
     _write_snapshot(
         table,
         df,
@@ -1212,7 +1054,7 @@ def compact_data_files(
         replace_partitions=set(cands),
         summary_extra={
             "compacted-partitions": str(len(cands)),
-            "rewritten-data-files": str(len(paths)),
+            "rewritten-data-files": str(len(entries)),
         },
     )
     new_groups: dict[tuple, int] = {}
@@ -1222,7 +1064,7 @@ def compact_data_files(
             new_groups[pt] = new_groups.get(pt, 0) + 1
     return {
         "compacted_partitions": len(cands),
-        "rewritten_files": len(paths),
+        "rewritten_files": len(entries),
         "added_files": sum(new_groups.values()),
         "rows": before_rows,
     }

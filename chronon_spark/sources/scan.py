@@ -22,27 +22,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronon_spark.api import EntitySource, EventSource, Query
+from chronon_spark.sources.tableio import format_of
 
 
 def _resolve(spark: SparkSession, table, q: Query | None = None) -> DataFrame:
-    """DataFrame passes through; ``iceberg:/path`` resolves through the
-    jar-free Iceberg format (sources/iceberg.py) — when the declarative
-    Query carries partition bounds on one of the table's partition columns,
-    they are pushed into METADATA-ONLY scan planning (manifest summaries +
-    file partition values prune the file list before Spark sees it — the
-    Iceberg analog of PushedFilters); anything else is a catalog table."""
+    """DataFrame passes through; ``iceberg:/path`` and ``delta:/path``
+    resolve through the jar-free format (tableio.FORMATS) — when the
+    declarative Query carries partition bounds on one of the table's
+    partition columns, they are pushed into METADATA-ONLY scan planning
+    (manifest or log partition values prune the file list before Spark sees
+    it — the analog of PushedFilters); anything else is a catalog table."""
     if isinstance(table, DataFrame):
         return table
-    if isinstance(table, str) and table.startswith("iceberg:"):
-        from chronon_spark.sources.iceberg import IcebergTable
-
-        t = IcebergTable(table[len("iceberg:") :])
-        return t.scan(spark, filters=_partition_bounds(t, q) or None)
-    if isinstance(table, str) and table.startswith("delta:"):
-        # same metadata-only pushdown through the Delta transaction log
-        from chronon_spark.sources.delta import DeltaTable
-
-        t = DeltaTable(table[len("delta:") :])
+    fmt = format_of(table)
+    if fmt is not None:
+        adapter, location = fmt
+        t = adapter.format_table(location)
         return t.scan(spark, filters=_partition_bounds(t, q) or None)
     return spark.table(table)
 

@@ -1,37 +1,59 @@
-"""Partitioned table IO: day-partitioned parquet tables with the reference's
-incremental-backfill semantics (Iceberg-ready, parquet-backed in this image).
+"""Day-partitioned tables: the one contract every output table keeps, and
+the incremental backfill built on it.
 
-Re-creates, Spark-first:
-- partition listing + unfilled-range computation (reference:
-  spark/src/main/scala/ai/chronon/spark/TableUtils.scala:791-858)
-- dynamic-partition insert-overwrite (TableUtils.scala:480-534) under one
-  write-layout rule, :func:`write_layout`: files per day follow the bytes
-  written, as in TableUtils.scala:673-697 — a small day is one file
-- per-partition lineage/metrics JSON + semantic-hash change detection
-  (SemanticHashUtils.scala) enabling resume-from-checkpoint: a partition is
-  the unit of work; present partitions with a matching semantic hash are
-  skipped, a changed hash archives and recomputes.
+The contract (reference TableUtils.scala, JoinBase.scala, SemanticHashUtils):
 
-Format scope: hive-style partitioned parquet, addressed either by path
-(this module) or by catalog name (``sources/catalog.py``: real
-``SHOW PARTITIONS`` / ``ALTER TABLE ADD COLUMNS`` / ``INSERT OVERWRITE``
-DDL through the session catalog, with an Iceberg DataFrameWriterV2 branch
-that activates when jars are attached via session.get_spark's
-``extra_conf``). The layout — one `ds=` directory per day, overwritten
-atomically per partition — maps 1:1 onto an Iceberg identity-partitioned
-table, so the semantics here are the portable subset.
+- a table is partitioned by one day column (``ds``, ``DS_FMT``);
+  ``partitions()`` lists the written days without a data scan
+  (TableUtils.scala:791-858), and ``read_range`` prunes to a day range
+  before the first task runs;
+- ``insert_overwrite`` is a dynamic partition overwrite: it replaces exactly
+  the days present in the frame (TableUtils.scala:480-534), under one
+  write-layout rule, :func:`write_layout` (files per day follow the bytes
+  written, as in TableUtils.scala:673-697 — a small day is one file), and
+  append-only schema evolution, :func:`check_schema_evolution`
+  (TableUtils.scala:970-1031);
+- lineage: one JSON record per day, ``<path>/_lineage/<ds>.json``, carrying
+  the chunk's semantic hash, rows and wall time. :func:`backfill` treats a
+  written day as the checkpoint: days with a matching hash are skipped, the
+  rest are archived and recomputed. ``archive_partitions`` drops the stale
+  days from the live table and moves their lineage to
+  ``<path>/_archive/<tag>/<ds>.lineage.json``; the leading underscore keeps
+  both sidecars invisible to Spark's reader and to ``partitions()``.
+
+Table kinds, chosen by output root in :func:`resolve_table`:
+
+- ``PartitionedTable`` (a plain path): hive-style ``ds=`` parquet
+  directories; partitions are listed from the directory layout, and archive
+  moves the day directories under ``_archive/<tag>/``.
+- ``MetadataPartitionedTable`` (``iceberg:`` / ``delta:`` roots, see
+  ``FORMATS``): the format's own metadata lists and prunes partitions, every
+  write is a commit, and archive is a metadata-only partition drop, so time
+  travel keeps the old data readable. A format supplies only
+  ``create_table``, ``overwrite_partitions`` and ``drop_partitions``.
+- ``catalog.CatalogTable`` (``catalog:<db>``): the same contract through
+  catalog DDL, with lineage in table properties.
+
+Both file formats also share the metadata-only scan path: filter checks
+(:func:`check_filters`), conservative file pruning (:func:`file_may_match`),
+the exact read of the planned files (:func:`read_files`), and the data-file
+writer (:func:`append_files`).
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import importlib
 import json
+import operator
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DS_FMT = "%Y-%m-%d"
 
@@ -54,8 +76,13 @@ def ds_range(start_ds: str, end_ds: str) -> list[str]:
     return out
 
 
+# --- tables ---------------------------------------------------------------
+
+
 @dataclass
 class PartitionedTable:
+    """Path-backed table: hive-style ``ds=`` parquet directories."""
+
     path: str
     ds_col: str = "ds"
 
@@ -64,8 +91,7 @@ class PartitionedTable:
 
     def partitions(self) -> list[str]:
         """List written day partitions from the directory layout (constant
-        metadata cost — no data scan; Iceberg variant reads the partitions
-        metadata table instead)."""
+        metadata cost — no data scan)."""
         if not self.exists():
             return []
         out = []
@@ -113,29 +139,158 @@ class PartitionedTable:
         with open(os.path.join(self._lineage_dir(), f"{ds}.json"), "w") as f:
             json.dump(meta, f, sort_keys=True)
 
+    def _archive_dir(self, tag: str) -> str:
+        dest = os.path.join(self.path, "_archive", tag)
+        os.makedirs(dest, exist_ok=True)
+        return dest
+
+    def _archive_lineage(self, ds_list: list[str], tag: str) -> None:
+        """Move the days' lineage aside so a stale hash cannot resurrect."""
+        dest = self._archive_dir(tag)
+        for ds in ds_list:
+            lin = os.path.join(self._lineage_dir(), f"{ds}.json")
+            if os.path.exists(lin):
+                shutil.move(lin, os.path.join(dest, f"{ds}.lineage.json"))
+
+    # -- writes -----------------------------------------------------------
+
     def archive_partitions(self, ds_list: list[str], tag: str) -> None:
         """Move partitions (and their lineage) under ``_archive/<tag>/`` —
         the reference's archive-then-recompute on semantic-hash change
-        (JoinBase.scala:60-68, SemanticHashUtils). Leading underscore keeps
-        archived data invisible to Spark's reader and to partitions()."""
-        import shutil
-
-        dest = os.path.join(self.path, "_archive", tag)
-        os.makedirs(dest, exist_ok=True)
+        (JoinBase.scala:60-68, SemanticHashUtils)."""
+        dest = self._archive_dir(tag)
         for ds in ds_list:
             part = os.path.join(self.path, f"{self.ds_col}={ds}")
             if os.path.isdir(part):
                 shutil.move(part, os.path.join(dest, f"{self.ds_col}={ds}"))
-            lin = os.path.join(self._lineage_dir(), f"{ds}.json")
-            if os.path.exists(lin):
-                shutil.move(lin, os.path.join(dest, f"{ds}.lineage.json"))
+        self._archive_lineage(ds_list, tag)
+
+    def insert_overwrite(self, df: DataFrame) -> None:
+        """Dynamic partition overwrite of the ``ds=`` directories. The conf
+        is pinned here (runtime-settable) rather than relying on the session
+        factory: with a caller-supplied SparkSession a STATIC overwrite would
+        silently delete all previously backfilled partitions. Schema
+        evolution is validated append-only BEFORE any data moves
+        (metadata-only footer read)."""
+        if self.partitions():
+            existing = {
+                f.name: f.dataType.simpleString()
+                # mergeSchema: without it Spark infers from ONE arbitrary
+                # footer, so columns added by a previous evolution could be
+                # missed and a dropped-column write would slip through
+                for f in df.sparkSession.read.option("mergeSchema", "true")
+                .parquet(self.path)
+                .schema.fields
+                if f.name != self.ds_col
+            }
+            incoming = {
+                f.name: f.dataType.simpleString()
+                for f in df.schema.fields
+                if f.name != self.ds_col
+            }
+            check_schema_evolution(existing, incoming, self.path)
+        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        df.write.mode("overwrite").partitionBy(self.ds_col).parquet(self.path)
+
+
+class MetadataPartitionedTable(PartitionedTable):
+    """A table whose own metadata (Iceberg manifests, the Delta log) lists
+    and prunes partitions — never a filesystem walk. ``table`` is the
+    format's handle (``format_table(path)``); a subclass supplies the three
+    format calls below. The lineage sidecars stay JSON files beside the
+    format's metadata."""
+
+    format_table: type
+
+    def __init__(self, path: str, ds_col: str = "ds"):
+        super().__init__(path, ds_col)
+        self.table = self.format_table(path)
+
+    def exists(self) -> bool:
+        return self.table.exists()
+
+    def partitions(self) -> list[str]:
+        if not self.exists():
+            return []
+        return sorted(
+            {
+                p[self.ds_col]
+                for p in self.table.partitions()
+                if p.get(self.ds_col) is not None
+            }
+        )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return self.table.scan(spark)
+
+    def read_range(self, spark: SparkSession, start_ds: str, end_ds: str) -> DataFrame:
+        """Partition-pruned through metadata, not directory globbing."""
+        return self.table.scan(
+            spark,
+            filters=[(self.ds_col, ">=", start_ds), (self.ds_col, "<=", end_ds)],
+        )
+
+    def archive_partitions(self, ds_list: list[str], tag: str) -> None:
+        """Semantic-hash invalidation (reference JoinBase.scala:60-68): a
+        metadata-only commit drops the stale days from the current version;
+        their data files stay on disk, readable through time travel."""
+        if not ds_list or not self.exists():
+            return
+        have = self.table.partition_columns()
+        if have != [self.ds_col]:
+            raise ValueError(
+                f"archive_partitions expects a [{self.ds_col}]-partitioned "
+                f"table; spec has {have}"
+            )
+        self.drop_partitions(ds_list, tag)
+        self._archive_lineage(ds_list, tag)
+
+    def insert_overwrite(self, df: DataFrame) -> None:
+        """Dynamic partition overwrite as one commit; the format enforces
+        append-only schema evolution inside it."""
+        if not self.exists():
+            self.create_table(df)
+        else:
+            self.overwrite_partitions(df)
+
+    # -- format calls ---------------------------------------------------------
+
+    def create_table(self, df: DataFrame) -> None:
+        """Create the table from ``df``, partitioned by ``ds_col``."""
+        raise NotImplementedError
+
+    def overwrite_partitions(self, df: DataFrame) -> None:
+        """Replace exactly the days present in ``df``, in one commit."""
+        raise NotImplementedError
+
+    def drop_partitions(self, ds_list: list[str], tag: str) -> None:
+        """Drop the days from the current version without touching data."""
+        raise NotImplementedError
+
+
+# output-root prefix -> (module, MetadataPartitionedTable subclass); imported
+# on use, since both format modules import this one
+FORMATS = {
+    "iceberg:": ("chronon_spark.sources.iceberg", "IcebergPartitionedTable"),
+    "delta:": ("chronon_spark.sources.delta", "DeltaPartitionedTable"),
+}
+
+
+def format_of(ref: str) -> tuple[type[MetadataPartitionedTable], str] | None:
+    """``(adapter class, location)`` for an ``iceberg:``/``delta:`` prefixed
+    reference; None for anything else."""
+    for prefix, (module, cls) in FORMATS.items():
+        if ref.startswith(prefix):
+            return getattr(importlib.import_module(module), cls), ref[len(prefix):]
+    return None
 
 
 def resolve_table(
     spark: SparkSession, out_root: str, name: str, ds_col: str = "ds"
 ):
     """Map an output root to a table handle: ``catalog:<db>`` roots yield a
-    catalog-managed ``CatalogTable`` (``<db>.<name>``, real DDL); anything
+    catalog-managed ``CatalogTable`` (``<db>.<name>``, real DDL), ``iceberg:``
+    and ``delta:`` roots the format's adapter (``<root>/<name>``); anything
     else is a path-backed ``PartitionedTable`` (``<root>/<name>``)."""
     if out_root.startswith("catalog:"):
         from chronon_spark.sources.catalog import CatalogTable
@@ -143,17 +298,117 @@ def resolve_table(
         db = out_root.split(":", 1)[1]
         safe = "".join(c if c.isalnum() or c == "_" else "_" for c in name)
         return CatalogTable(spark, f"{db}.{safe}", ds_col)
-    if out_root.startswith("iceberg:"):
-        from chronon_spark.sources.iceberg import IcebergPartitionedTable
-
-        root = out_root.split(":", 1)[1]
-        return IcebergPartitionedTable(os.path.join(root, name), ds_col)
-    if out_root.startswith("delta:"):
-        from chronon_spark.sources.delta import DeltaPartitionedTable
-
-        root = out_root.split(":", 1)[1]
-        return DeltaPartitionedTable(os.path.join(root, name), ds_col)
+    fmt = format_of(out_root)
+    if fmt is not None:
+        adapter, root = fmt
+        return adapter(os.path.join(root, name), ds_col)
     return PartitionedTable(os.path.join(out_root, name), ds_col)
+
+
+# --- metadata-only scans (both file formats) ------------------------------
+
+_OPS = {"=": operator.eq, "<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+
+
+def check_filters(filters: list[tuple] | None, columns) -> list[tuple]:
+    """Validate ``(column, op, value)`` scan filters against the table's
+    columns; returns the filter list (empty for None)."""
+    filters = filters or []
+    for col, op, _ in filters:
+        if col not in columns:
+            raise ValueError(f"unknown filter column {col!r}; have {sorted(columns)}")
+        if op not in _OPS:
+            raise ValueError(f"unsupported filter op {op!r}")
+    return filters
+
+
+def _cmp_match(op: str, lo, hi, v) -> bool:
+    """Can any value in [lo, hi] satisfy (x op v)? None bound = unknown."""
+    if op == "=":
+        return (lo is None or lo <= v) and (hi is None or hi >= v)
+    if op == "<":
+        return lo is None or lo < v
+    if op == "<=":
+        return lo is None or lo <= v
+    if op == ">":
+        return hi is None or hi > v
+    if op == ">=":
+        return hi is None or hi >= v
+    return True
+
+
+def file_may_match(filters: list[tuple], part: dict, bounds) -> bool:
+    """Can a data file hold a row matching every filter? ``part`` holds the
+    file's partition values (exact), ``bounds(col)`` its (lo, hi) column
+    stats. Conservative: a file is dropped only when a partition value or
+    the bounds PROVE no row matches; a null partition value is kept."""
+    for col, op, val in filters:
+        if col in part:
+            if part[col] is None:
+                continue
+            lo = hi = part[col]
+        else:
+            lo, hi = bounds(col)
+        if not _cmp_match(op, lo, hi, val):
+            return False
+    return True
+
+
+def read_files(
+    spark: SparkSession,
+    entries: list[dict],
+    schema: T.StructType,
+    base_path: str,
+    part_cols: list[str],
+    filters: list[tuple] | None = None,
+) -> DataFrame:
+    """Read the planned data files (``entries``' paths) at the table's
+    current ``schema`` and apply ``filters`` EXACTLY: planning prunes I/O,
+    correctness never depends on stats."""
+    if not entries:
+        return spark.createDataFrame([], schema)
+    df = (
+        spark.read.option("basePath", base_path)
+        # mergeSchema: files written before an append-only schema evolution
+        # lack the new columns; the union schema surfaces them
+        .option("mergeSchema", "true")
+        .parquet(*[e["path"] for e in entries])
+    )
+    for f in schema.fields:  # pad columns no surviving file carries yet
+        if f.name not in df.columns:
+            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    dtypes = {f.name: f.dataType for f in schema.fields}
+    for pc in part_cols:  # path inference may retype; restore
+        df = df.withColumn(pc, F.col(pc).cast(dtypes[pc]))
+    for col, op, val in filters or []:
+        df = df.where(_OPS[op](F.col(col), F.lit(val)))
+    return df.select(*[f.name for f in schema.fields])
+
+
+def _list_parquet(root: str) -> list[str]:
+    """Every parquet file under ``root``, skipping a Delta ``_delta_log``."""
+    files = []
+    for dirpath, _dirs, names in os.walk(root):
+        if "_delta_log" in dirpath.split(os.sep):
+            continue
+        for n in names:
+            if n.endswith(".parquet"):
+                files.append(os.path.join(dirpath, n))
+    return sorted(files)
+
+
+def append_files(df: DataFrame, location: str, part_cols: list[str]) -> list[str]:
+    """Append ``df`` as hive-layout parquet under ``location`` and return
+    the data files the write added — the input to a format's commit."""
+    before = set(_list_parquet(location)) if os.path.isdir(location) else set()
+    writer = df.write.mode("append")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(location)
+    return [p for p in _list_parquet(location) if p not in before]
+
+
+# --- backfill -------------------------------------------------------------
 
 
 def unfilled_ranges(
@@ -235,62 +490,34 @@ class SchemaEvolutionError(ValueError):
 
 
 def check_schema_evolution(
-    existing: dict[str, str], incoming: dict[str, str]
+    existing: dict[str, str], incoming: dict[str, str], table: str
 ) -> list[str]:
     """Append-only evolution contract (reference TableUtils.scala:970-1031:
-    the only allowed DDL is ALTER TABLE ADD COLUMNS): NEW columns are fine
-    (old partitions read them as null via mergeSchema); dropping a column or
-    changing its type is rejected with a structured message."""
+    the only allowed DDL is ALTER TABLE ADD COLUMNS), over {column: type}
+    maps. Returns the NEW columns, in ``incoming`` order (old partitions
+    read them as null); dropping a column or changing its type raises
+    ``SchemaEvolutionError`` naming every problem, before any data moves."""
     problems = []
     for name, typ in existing.items():
         if name not in incoming:
-            problems.append(f"column '{name}' ({typ}) dropped — evolution is append-only")
+            problems.append(f"column '{name}' ({typ}) dropped")
         elif incoming[name] != typ:
-            problems.append(
-                f"column '{name}' changes type {typ} -> {incoming[name]} — not allowed"
-            )
-    return problems
+            problems.append(f"column '{name}' changes type {typ} -> {incoming[name]}")
+    if problems:
+        raise SchemaEvolutionError(
+            f"append schema mismatch, write to {table} rejected: "
+            + "; ".join(problems) + " (evolution is append-only)"
+        )
+    return [n for n in incoming if n not in existing]
 
 
-def insert_overwrite_partitions(df: DataFrame, table: "PartitionedTable") -> None:
+def insert_overwrite_partitions(df: DataFrame, table: PartitionedTable) -> None:
     """Dynamic partition overwrite: replaces exactly the ds partitions present
-    in ``df``. The conf is pinned here (runtime-settable) rather than relying
-    on the session factory: with a caller-supplied SparkSession a STATIC
-    overwrite would silently delete all previously backfilled partitions.
-
-    Schema evolution is validated append-only BEFORE any data moves
-    (metadata-only footer read): new columns ok, drops/type-changes raise.
-
-    Accepts either a path-backed ``PartitionedTable`` or a catalog-backed
-    ``catalog.CatalogTable`` (which owns its evolution DDL + writer); every
-    kind gets the one file layout, :func:`write_layout`."""
-    df = write_layout(df, [table.ds_col])
-    if hasattr(table, "insert_overwrite"):
-        table.insert_overwrite(df)
-        return
-    if table.exists() and table.partitions():
-        existing = {
-            f.name: f.dataType.simpleString()
-            # mergeSchema: without it Spark infers from ONE arbitrary footer,
-            # so columns added by a previous evolution could be missed and a
-            # dropped-column write would slip through the guard
-            for f in df.sparkSession.read.option("mergeSchema", "true")
-            .parquet(table.path)
-            .schema.fields
-            if f.name != table.ds_col
-        }
-        incoming = {
-            f.name: f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.name != table.ds_col
-        }
-        problems = check_schema_evolution(existing, incoming)
-        if problems:
-            raise SchemaEvolutionError(
-                f"write to {table.path} rejected: " + "; ".join(problems)
-            )
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(table.ds_col).parquet(table.path)
+    in ``df``. Every table kind (``PartitionedTable`` and its metadata
+    subclasses, ``catalog.CatalogTable``) gets the one file layout,
+    :func:`write_layout`, then writes through its own ``insert_overwrite``,
+    which validates append-only schema evolution before any data moves."""
+    table.insert_overwrite(write_layout(df, [table.ds_col]))
 
 
 def backfill(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 from collections import Counter
 
@@ -105,6 +106,29 @@ def test_insert_overwrite_writes_one_file_per_small_ds(spark, tmp_path, root):
     assert Counter(file_days) == {d: 1 for d in ds_range("2024-01-01", "2024-01-03")}
     got = t.read(spark).select(*df.columns).collect()
     assert sorted(got) == sorted(df.collect())
+
+
+@pytest.mark.parametrize("root", ["", "iceberg:", "delta:"])
+def test_hash_change_archives_lineage_sidecars(spark, tmp_path, root):
+    """A semantic-hash change moves every stale day's lineage sidecar to
+    ``_archive/pre_<hash>/<ds>.lineage.json``; the table then lists and
+    reads only the days recomputed under the new hash."""
+    t = resolve_table(spark, f"{root}{tmp_path}", "tbl")
+    backfill(spark, t, lambda s, lo, hi: _mk(s, lo, hi, "h1"), "2024-01-01", "2024-01-04", "h1")
+    backfill(spark, t, lambda s, lo, hi: _mk(s, lo, hi, "h2"), "2024-01-02", "2024-01-03", "h2")
+
+    archived = os.path.join(t.path, "_archive", "pre_h2")
+    for d in ds_range("2024-01-01", "2024-01-04"):
+        with open(os.path.join(archived, f"{d}.lineage.json")) as f:
+            assert json.load(f)["semantic_hash"] == "h1"
+    assert sorted(os.listdir(os.path.join(t.path, "_lineage"))) == [
+        "2024-01-02.json", "2024-01-03.json",
+    ]
+    assert t.partitions() == ["2024-01-02", "2024-01-03"]
+    got = t.read_range(spark, "2024-01-01", "2024-01-04").select("ds", "tag").collect()
+    assert sorted(got) == sorted(
+        (d, "h2") for d in ["2024-01-02", "2024-01-03"] for _ in range(5)
+    )
 
 
 def test_write_layout_splits_a_hot_ds_by_measured_size(spark, tmp_table):

@@ -223,3 +223,12 @@ def test_approx_percentile_rides_cascade_lossless(spark, events):
     finally:
         G2._temporal_pass_exact = orig
     assert not calls, "percentile fell back to the exact range join under auto"
+
+
+@pytest.mark.parametrize("strategy", ["slidng", "hop", "", "AUTO"])
+def test_unknown_strategy_raises(spark, events, gb, strategy):
+    """A misspelt strategy must fail loudly, not fall back to the exact
+    range join (the quadratic path on hot keys)."""
+    q = events.select("user_id", "ts").limit(5)
+    with pytest.raises(ValueError, match="auto.*sliding.*hops.*exact"):
+        temporal_events(q, events, gb, tiebreak="event_id", strategy=strategy)

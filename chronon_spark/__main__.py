@@ -420,93 +420,42 @@ def cmd_group_by_upload(spark, conf, args) -> dict:
     """Batch IR upload tables for online serving (reference
     GroupByUpload.scala:38-105): collapsed IRs + tail-hop tiles as of the
     batch end, both partial/merge-able by a fetcher."""
-    from pyspark.sql import functions as F
-
-    from chronon_spark.operators.upload import upload_batch_irs
-    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+    from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
 
     gb = conf.group_by
-    collapsed, tail = upload_batch_irs(
+    frames = upload_batch_irs(
         conf.source(spark), gb, args.batch_end_ds, tiebreak=_opt(conf, "tiebreak")
     )
-    tables = {}
-    for suffix, frame in (("upload_collapsed", collapsed), ("upload_tail", tail)):
-        t = resolve_table(spark, args.out_root, f"{gb.name}_{suffix}")
-        insert_overwrite_partitions(
-            frame.withColumn("ds", F.lit(args.batch_end_ds)), t
-        )
-        # upload provenance: fetch refuses to lambda-merge IRs computed
-        # under a different GroupBy definition (serving-time hash check)
-        t.write_lineage(args.batch_end_ds, {"semantic_hash": gb.semantic_hash()})
-        tables[suffix] = _table_id(t)
+    tables = write_upload_tables(spark, args.out_root, gb, args.batch_end_ds, frames)
     return {
         "command": "group-by-upload",
         "batch_end_ds": args.batch_end_ds,
         "semantic_hash": gb.semantic_hash(),
-        "tables": tables,
+        "tables": {suffix: _table_id(t) for suffix, t in tables.items()},
     }
 
 
 def cmd_fetch(spark, conf, args) -> dict:
     """Offline-simulated Fetcher.fetchJoin over PREVIOUSLY UPLOADED IR
-    tables (reference Driver.scala ``fetch``): read the
-    ``{gb}_upload_collapsed`` / ``{gb}_upload_tail`` tables written by
-    ``group-by-upload``, lambda-merge each part with its stream, write the
-    enriched request frame."""
+    tables (reference Driver.scala ``fetch``): read each part's upload under
+    the upload-table contract of ``operators/upload.py`` (one error per
+    stale or unstamped part), lambda-merge each part with its stream, write
+    the enriched request frame."""
     from pyspark.sql import functions as F
 
-    from chronon_spark.operators.upload import fetch_join
+    from chronon_spark.operators.upload import StaleUploadError, fetch_join, read_upload_tables
     from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
 
     join = conf.join
-    batch = {}
-    stale = []
+    batch, errors = {}, []
     for part in join.join_parts:
         gb = part.group_by
-        frames = []
-        for suffix in ("upload_collapsed", "upload_tail"):
-            t = resolve_table(spark, args.upload_root, f"{gb.name}_{suffix}")
-            # serving-time safety: the uploaded IRs must have been computed
-            # under THIS GroupBy definition — lambda-merging stale IRs with a
-            # fresh stream silently serves wrong features (the reference's
-            # fetcher gets the same guarantee from the KV-uploaded conf)
-            lin = (t.lineage(args.batch_end_ds) or {}).get("semantic_hash")
-            if lin is None:
-                # pre-lineage upload tables (written by an older
-                # group-by-upload, or by upload_batch_irs directly) carry no
-                # hash to verify — distinct code + remedy, rather than a
-                # misleading "hash None" staleness claim
-                stale.append(
-                    {
-                        "code": "MISSING_UPLOAD_LINEAGE",
-                        "message": (
-                            f"{_table_id(t)}@{args.batch_end_ds} has no upload "
-                            f"lineage for GroupBy '{gb.name}': re-run "
-                            "group-by-upload (current versions stamp the "
-                            "definition hash the serving check verifies)"
-                        ),
-                    }
-                )
-                continue
-            if lin != gb.semantic_hash():
-                stale.append(
-                    {
-                        "code": "STALE_UPLOAD",
-                        "message": (
-                            f"{_table_id(t)}@{args.batch_end_ds}: uploaded hash "
-                            f"{lin} != current definition {gb.semantic_hash()} "
-                            f"for GroupBy '{gb.name}' — re-run group-by-upload"
-                        ),
-                    }
-                )
-                continue
-            frames.append(
-                t.read(spark).where(F.col("ds") == args.batch_end_ds).drop("ds")
-            )
-        if len(frames) == 2:
-            batch[gb.name] = (frames[0], frames[1])
-    if stale:
-        return {"command": "fetch", "errors": stale}
+        try:
+            batch[gb.name] = read_upload_tables(spark, args.upload_root, gb, args.batch_end_ds)
+        except StaleUploadError as e:
+            errors.append({"code": e.code, "message": str(e)})
+    if errors:
+        return {"command": "fetch", "errors": errors}
     out = fetch_join(
         conf.requests(spark), batch, conf.streams(spark), join,
         args.batch_end_ds, tiebreak=_opt(conf, "tiebreak"),

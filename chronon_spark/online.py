@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from chronon_spark.operators.upload import StaleUploadError, read_upload_tables
+
 
 # ---------------------------------------------------------------------------
 # generic caches
@@ -232,20 +234,12 @@ class Metrics:
 # ---------------------------------------------------------------------------
 
 
-class StaleUploadError(RuntimeError):
-    """Uploaded IRs were computed under a different GroupBy definition —
-    lambda-merging them with a fresh stream would silently serve wrong
-    features (the same guarantee cmd_fetch enforces via STALE_UPLOAD)."""
-
-
 class Fetcher:
-    """Serving-session fetch front-end over group-by-upload's IR tables
-    (reference Fetcher + FetcherCache): reads ``{gb}_upload_collapsed`` /
-    ``{gb}_upload_tail`` under ``upload_root``, verifies the upload lineage
-    hash ONCE, persists the verified frames, and reuses them for every
-    subsequent fetch of that (definition, batch day) — the batch-IR cache,
-    with frames in the role of decoded KV bytes. Metrics record requests,
-    cache hits/misses, and staleness rejections."""
+    """Serving-session fetch front-end (reference Fetcher + FetcherCache):
+    each GroupBy's upload tables (contract: ``operators/upload.py``) are
+    read and verified once per (definition, batch day), persisted, and
+    reused by every later fetch — the batch-IR cache. Metrics record
+    requests, cache hits/misses, and staleness rejections."""
 
     def __init__(
         self,
@@ -265,26 +259,13 @@ class Fetcher:
         ]
 
     def _load_batch_frames(self, gb, batch_end_ds: str) -> tuple[DataFrame, DataFrame]:
-        from pyspark.sql import functions as F
-
-        from chronon_spark.sources.tableio import resolve_table
-
-        frames = []
-        for suffix in ("upload_collapsed", "upload_tail"):
-            t = resolve_table(self.spark, self.upload_root, f"{gb.name}_{suffix}")
-            lin = (t.lineage(batch_end_ds) or {}).get("semantic_hash")
-            if lin != gb.semantic_hash():
-                ctx = Context("group_by.fetching", group_by=gb.name)
-                self.metrics.increment(ctx, "fetch.stale_upload")
-                raise StaleUploadError(
-                    f"{gb.name}_{suffix}@{batch_end_ds}: uploaded hash {lin} "
-                    f"!= current definition {gb.semantic_hash()} — re-run "
-                    "group-by-upload"
-                )
-            frames.append(
-                t.read(self.spark).where(F.col("ds") == batch_end_ds).drop("ds").persist()
-            )
-        return tuple(frames)
+        try:
+            frames = read_upload_tables(self.spark, self.upload_root, gb, batch_end_ds)
+        except StaleUploadError:
+            ctx = Context("group_by.fetching", group_by=gb.name)
+            self.metrics.increment(ctx, "fetch.stale_upload")
+            raise
+        return tuple(f.persist() for f in frames)
 
     def batch_frames(self, gb, batch_end_ds: str) -> tuple[DataFrame, DataFrame]:
         key = (gb.name, gb.semantic_hash(), batch_end_ds)
@@ -325,43 +306,21 @@ class Fetcher:
         streams: dict[str, DataFrame],
         join,
         batch_end_ds: str,
-        external_registry: "ExternalSourceRegistry | None" = None,
         **kwargs,
     ) -> DataFrame:
-        """Join-level fetch over cached part IRs (aggregating parts only —
-        selection parts have no upload-table convention; serve those through
-        operators.upload.fetch_join with an explicit snapshot frame).
-
-        With an ``external_registry``, the join's external_parts are fetched
-        from their registered handlers and merged into the feature frame
-        (reference Fetcher.fetchJoin combining fetchGroupBys with
-        fetchExternal); without one, external parts are skipped — the
-        offline-padding contract applies only to backfills."""
+        """``operators.upload.fetch_join`` over the cached, verified part
+        IRs; keyword arguments (``external_registry``, ``tiebreak``, ...)
+        pass through."""
         from chronon_spark.operators.upload import fetch_join
 
         ctx = Context("join.fetching", join=join.name)
         self.metrics.increment(ctx, "fetch.requests")
-        batch = {}
-        for part in join.join_parts:
-            gb = part.group_by
-            if gb.aggregations is None:
-                raise ValueError(
-                    f"selection part '{gb.name}' has no uploaded IR tables; "
-                    "use operators.upload.fetch_join with a snapshot frame"
-                )
-            batch[gb.name] = self.batch_frames(gb, batch_end_ds)
+        batch = {
+            p.group_by.name: self.batch_frames(p.group_by, batch_end_ds)
+            for p in join.join_parts
+        }
         try:
-            out = fetch_join(
-                requests, batch, streams, join, batch_end_ds, **kwargs
-            )
-            if external_registry is not None and join.external_parts:
-                # serving degrades gracefully: a failing external source
-                # surfaces as an ext_{name}_exception value, the rest of the
-                # feature vector still serves (reference fetchJoin behavior)
-                out = external_registry.enrich(
-                    out, join.external_parts, graceful=True
-                )
-            return out
+            return fetch_join(requests, batch, streams, join, batch_end_ds, **kwargs)
         except Exception as exc:
             self.metrics.increment_exception(ctx, exc)
             raise

@@ -14,6 +14,8 @@ lineage + resume, mirroring the reference's per-part tables
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -117,23 +119,67 @@ def _snapshot_part_features(
     )
     # the midnight query runs through the TEMPORAL engine — the accuracy
     # difference is entirely in the query timestamp shift
-    gb_t = G.GroupBy(
-        name=gb.name,
-        keys=gb.keys,
-        aggregations=gb.aggregations,
-        accuracy=Accuracy.TEMPORAL,
-        time_column=gb.time_column,
-        derivations=gb.derivations,
-        setups=gb.setups,
-    )
     feat = G.temporal_events(
         q_mid.select(*gb.keys, left_time_column, "__orig_ts").dropDuplicates(),
         events,
-        gb_t,
+        replace(gb, accuracy=Accuracy.TEMPORAL),
         left_time_column=left_time_column,
         tiebreak=tiebreak,
     )
     return feat.withColumn(left_time_column, F.col("__orig_ts")).drop("__orig_ts")
+
+
+def part_query(left: DataFrame, part: JoinPart, time_column: str) -> DataFrame:
+    """A part's query frame: the left keys renamed to the GroupBy's key
+    names (keyMapping flip, reference api/.../Extensions.scala:745-755),
+    one row per distinct (keys, time)."""
+    gb = part.group_by
+    return left.select(
+        *[F.col(lk).alias(rk) for lk, rk in zip(part.left_keys(), gb.keys)],
+        F.col(time_column),
+    ).dropDuplicates([*gb.keys, time_column])
+
+
+def _flip_keys(feat: DataFrame, part: JoinPart) -> DataFrame:
+    """Rename a part's GroupBy key columns back to the left's names."""
+    for lk, rk in zip(part.left_keys(), part.group_by.keys):
+        if lk != rk:
+            feat = feat.withColumnRenamed(rk, lk)
+    return feat
+
+
+def part_output(feat: DataFrame, part: JoinPart, time_column: str) -> DataFrame:
+    """A part's features under the left's names: EVERY value column gets the
+    part's prefix, derivation outputs too (reference Extensions.scala
+    valueColumns), and the keys flip back to the left keys."""
+    ident = {*part.group_by.keys, time_column}
+    prefix = part.full_prefix()
+    return _flip_keys(
+        feat.withColumnsRenamed({c: f"{prefix}_{c}" for c in feat.columns if c not in ident}),
+        part,
+    )
+
+
+def assemble_join(
+    left: DataFrame, feats: list[tuple[JoinPart, DataFrame]], join: Join, externals=None
+) -> DataFrame:
+    """A join's one assembly order, offline and online: coalesced-join each
+    part's ``part_output`` frame onto ``left``, attach the external parts,
+    then apply the join derivations with ``left``'s columns as identity.
+    External parts have no offline table, so by default their slots are
+    padded with typed nulls (Join.scala:76-123); a fetch passes
+    ``externals(frame, parts)`` instead."""
+    out = left
+    for part, feat in feats:
+        out = coalesced_join(out, feat, [*part.left_keys(), join.time_column])
+    if join.external_parts:
+        if externals is None:
+            from chronon_spark.operators.bootstrap import pad_external_parts
+
+            out = pad_external_parts(out, join.external_parts)
+        else:
+            out = externals(out, join.external_parts)
+    return G.apply_derivations(out, join.derivations, keep=list(left.columns))
 
 
 def compute_join_part(
@@ -147,13 +193,7 @@ def compute_join_part(
     """Features for one join part, keyed by the LEFT column names, with the
     part's `{prefix}_{group_by}_` column prefix applied."""
     gb = part.group_by
-    lkeys = part.left_keys()
-    # rename left keys to the GroupBy's key names (keyMapping flip,
-    # reference api/.../Extensions.scala:745-755)
-    q = left.select(
-        *[F.col(lk).alias(rk) for lk, rk in zip(lkeys, gb.keys)],
-        F.col(left_time_column),
-    ).dropDuplicates([*gb.keys, left_time_column])
+    q = part_query(left, part, left_time_column)
     if gb.aggregations is None:
         if isinstance(events, (tuple, list, dict)):
             raise ValueError(
@@ -188,13 +228,7 @@ def compute_join_part(
             .join(snap, [*gb.keys, "__serve_ds"], "left")
             .drop("__serve_ds")
         )
-        prefix = part.full_prefix()
-        for c in fields:
-            feat = feat.withColumnRenamed(c, f"{prefix}_{c}")
-        for lk, rk in zip(lkeys, gb.keys):
-            if lk != rk:
-                feat = feat.withColumnRenamed(rk, lk)
-        return feat
+        return part_output(feat, part, left_time_column)
     if isinstance(events, (tuple, list, dict)):
         # entity-CDC source: (snapshots, mutations) — point-in-time features
         # over a mutable dimension via the signed-sum mutation engine
@@ -221,20 +255,20 @@ def compute_join_part(
         feat = _snapshot_part_features(
             q, events, gb, left_time_column, tiebreak, snapshot_frame
         )
-    prefix = part.full_prefix()
-    # prefix EVERY value column — including derivation outputs, whose names
-    # are not in output_columns() (reference Extensions.scala valueColumns
-    # covers derived columns; unprefixed derived names would collide across
-    # parts sharing a derivation name)
-    ident = {*gb.keys, left_time_column}
-    for c in feat.columns:
-        if c not in ident:
-            feat = feat.withColumnRenamed(c, f"{prefix}_{c}")
-    # flip key names back to the left's column names
-    for lk, rk in zip(lkeys, gb.keys):
-        if lk != rk:
-            feat = feat.withColumnRenamed(rk, lk)
-    return feat
+    return part_output(feat, part, left_time_column)
+
+
+def _atoms(gb) -> dict[str, object]:
+    """{output column: single-(window, bucket) aggregation} of a GroupBy."""
+    return {
+        a.output_name(w, b): replace(
+            a,
+            windows=(w,) if w is not None else None,
+            buckets=(b,) if b is not None else None,
+        )
+        for a in gb.aggregations
+        for w, b in a.unpacked()
+    }
 
 
 def _merge_groups(
@@ -250,8 +284,6 @@ def _merge_groups(
     part — the reference's shared per-part intermediate-table reuse
     (JoinBase.scala:196-213) taken one step further. Order of first
     appearance is preserved."""
-    from dataclasses import replace
-
     groups: dict[tuple, list[JoinPart]] = {}
     atom_reg: dict[tuple, dict[str, object]] = {}  # group -> {out col: atom}
     order: list[tuple] = []
@@ -278,15 +310,7 @@ def _merge_groups(
             # (lg_k / accuracy / mg_cap / percentiles) — those must NOT share
             # a pass (one column cannot carry two definitions), so such a
             # part falls through to the next variant of the group
-            part_atoms = {
-                a.output_name(w, b): replace(
-                    a,
-                    windows=(w,) if w is not None else None,
-                    buckets=(b,) if b is not None else None,
-                )
-                for a in gb.aggregations
-                for w, b in a.unpacked()
-            }
+            part_atoms = _atoms(gb)
             v = 0
             while True:
                 key = (*base, v)
@@ -312,44 +336,26 @@ def _compute_merged_parts(
     """One temporal_events pass serving several join parts (same source,
     same key mapping): aggregations are deduplicated across parts, computed
     once, and fanned back out to each part's prefixed column names."""
-    from dataclasses import replace
-
     first = parts[0]
     gb0 = first.group_by
-    lkeys = first.left_keys()
     # dedupe at OUTPUT-COLUMN granularity: parts may declare overlapping but
     # non-identical aggregations (e.g. MIN(value) over (2h,) in one part and
     # over (2h, 1d) in another) — whole-Aggregation dedup would render
     # value_min_2h twice and make the merged frame ambiguous. _merge_groups
     # guarantees no same-name atoms with different definitions reach here.
-    merged_aggs: list = []
-    seen_cols: set[str] = set()
+    merged_atoms: dict[str, object] = {}
     for p in parts:
-        for a in p.group_by.aggregations:
-            for w, b in a.unpacked():
-                col = a.output_name(w, b)
-                if col in seen_cols:
-                    continue
-                seen_cols.add(col)
-                merged_aggs.append(
-                    replace(
-                        a,
-                        windows=(w,) if w is not None else None,
-                        buckets=(b,) if b is not None else None,
-                    )
-                )
+        for col, atom in _atoms(p.group_by).items():
+            merged_atoms.setdefault(col, atom)
     merged_gb = G.GroupBy(
         name=gb0.name,
         keys=gb0.keys,
-        aggregations=merged_aggs,
+        aggregations=list(merged_atoms.values()),
         accuracy=Accuracy.TEMPORAL,
         time_column=gb0.time_column,
         setups=[s for p in parts for s in p.group_by.setups],
     )
-    q = left.select(
-        *[F.col(lk).alias(rk) for lk, rk in zip(lkeys, gb0.keys)],
-        F.col(left_time_column),
-    ).dropDuplicates([*gb0.keys, left_time_column])
+    q = part_query(left, first, left_time_column)
     feat = G.temporal_events(
         q, events, merged_gb, left_time_column=left_time_column, tiebreak=tiebreak
     )
@@ -359,11 +365,7 @@ def _compute_merged_parts(
         prefix = p.full_prefix()
         for c in p.group_by.output_columns():
             sel.append(F.col(c).alias(f"{prefix}_{c}"))
-    feat = feat.select(*sel)
-    for lk, rk in zip(lkeys, gb0.keys):
-        if lk != rk:
-            feat = feat.withColumnRenamed(rk, lk)
-    return feat
+    return _flip_keys(feat.select(*sel), first)
 
 
 def _part_skew_keys(part: JoinPart, skew_keys: dict[str, list]) -> dict[str, list]:
@@ -433,7 +435,7 @@ def compute_join(
         # each part's source is filtered per-part below
         left = filter_skew_keys(left, join.skew_keys)
     G.run_setups(left, join.setups)
-    out = left
+    feats = []
     for parts in _merge_groups(join, sources):
         # parts in one merge group share their key mapping, so the mapped
         # exclusion is identical across the group
@@ -442,28 +444,15 @@ def compute_join(
             _part_skew_keys(parts[0], join.skew_keys),
         )
         if len(parts) == 1:
-            part = parts[0]
             feat = compute_join_part(
-                left.select(*part.left_keys(), join.time_column).dropDuplicates(),
-                events,
-                part,
-                left_time_column=join.time_column,
-                tiebreak=tiebreak,
+                left, events, parts[0], left_time_column=join.time_column, tiebreak=tiebreak
             )
         else:
             feat = _compute_merged_parts(
                 left, events, parts, join.time_column, tiebreak
             )
-        out = coalesced_join(out, feat, [*parts[0].left_keys(), join.time_column])
-    if join.external_parts:
-        # external features have no offline table: pad unbootstrapped slots
-        # with typed nulls, mirror contextual request columns (Join.scala:76-123)
-        from chronon_spark.operators.bootstrap import pad_external_parts
-
-        out = pad_external_parts(out, join.external_parts)
-    if join.derivations:
-        out = G.apply_derivations(out, join.derivations, keep=list(left.columns))
-    return out
+        feats.append((parts[0], feat))
+    return assemble_join(left, feats, join)
 
 
 def narrow_events(events: DataFrame, gb, lo_ds: str, hi_ds: str) -> DataFrame:
@@ -642,15 +631,13 @@ def materialize_join(
     table and assembles. Unknown prefixes raise (a typo would silently
     schedule a no-op node).
     """
-    from chronon_spark.operators.groupby import run_setups
-    from chronon_spark.sources.tableio import backfill, resolve_table
-
     from chronon_spark.operators.skew import filter_skew_keys
+    from chronon_spark.sources.tableio import backfill, resolve_table
 
     sources = _resolve_sources(spark, sources)
     if join.skew_keys:
         left = filter_skew_keys(left, join.skew_keys)
-    run_setups(left, join.setups)
+    G.run_setups(left, join.setups)
     tc = join.time_column
     left_ds = _stamp_ds(left, tc)
 
@@ -707,13 +694,7 @@ def materialize_join(
             # (name AND stored semantic hash) comes from a derivation-free
             # definition — one table serves parts that differ only in
             # derivations, and a derivation-only edit never archives it
-            gb_base = G.GroupBy(
-                name=gb.name,
-                keys=gb.keys,
-                aggregations=gb.aggregations,
-                accuracy=Accuracy.SNAPSHOT,
-                time_column=gb.time_column,
-            )
+            gb_base = replace(gb, derivations={}, setups=[])
             snap_hash = gb_base.semantic_hash()
             if mapped_skew:
                 skew_tag = ";".join(
@@ -745,10 +726,6 @@ def materialize_join(
                 snapshot_tables[snap_name] = snap_table
 
         def compute_range(s, lo, hi, part=part, events=events, snap_table=snap_table):
-            sliver = left_ds.where(F.col("ds").between(lo, hi))
-            q = sliver.select(*part.left_keys(), tc, "ds").dropDuplicates(
-                [*part.left_keys(), tc]
-            )
             ev = narrow_events(events, part.group_by, lo, hi)
             # a snapshot table with ZERO written partitions has no parquet
             # schema to read — fall back to the (trivially cheap) midnight
@@ -758,9 +735,11 @@ def materialize_join(
                 if snap_table is not None and snap_table.partitions()
                 else None
             )
-            return compute_join_part(
-                q.drop("ds"), ev, part, tc, tiebreak, snapshot_frame=snap
-            ).join(q.select(*part.left_keys(), tc, "ds"), [*part.left_keys(), tc])
+            # ds is a function of the time column: re-stamp, don't re-join
+            sliver = left_ds.where(F.col("ds").between(lo, hi))
+            return _stamp_ds(
+                compute_join_part(sliver, ev, part, tc, tiebreak, snapshot_frame=snap), tc
+            )
 
         backfill(
             spark,
@@ -779,19 +758,11 @@ def materialize_join(
     final = resolve_table(spark, out_root, join.name)
 
     def assemble_range(s, lo, hi):
-        out = left_ds.where(F.col("ds").between(lo, hi))
-        for part in join.join_parts:
-            pt = part_tables[part.full_prefix()].read_range(s, lo, hi).drop("ds")
-            out = coalesced_join(out, pt, [*part.left_keys(), tc])
-        if join.external_parts:
-            from chronon_spark.operators.bootstrap import pad_external_parts
-
-            out = pad_external_parts(out, join.external_parts)
-        if join.derivations:
-            out = G.apply_derivations(
-                out, join.derivations, keep=[*left.columns, "ds"]
-            )
-        return out
+        feats = [
+            (part, part_tables[part.full_prefix()].read_range(s, lo, hi).drop("ds"))
+            for part in join.join_parts
+        ]
+        return assemble_join(left_ds.where(F.col("ds").between(lo, hi)), feats, join)
 
     backfill(
         spark,

@@ -29,6 +29,23 @@ the full unified log, which is exactly what the tests assert.
 
 The un-aggregated KV write path (streaming/GroupBy.scala:150-198 — raw
 keyed event rows, aggregation deferred to the fetcher) is ``kv_event_rows``.
+
+Upload-table contract, with one writer (``write_upload_tables``, used by
+``group-by-upload``) and one reader (``read_upload_tables``, used by
+``fetch``, ``online.Fetcher`` and the HTTP service):
+
+- GroupBy ``gb`` uploads the two ``upload_batch_irs`` frames as the
+  day-partitioned tables ``{gb}_upload_collapsed`` and ``{gb}_upload_tail``
+  under an upload root (any ``tableio.resolve_table`` root), overwriting
+  partition ``ds = batch_end_ds`` and stamping its lineage with
+  ``semantic_hash = gb.semantic_hash()``.
+- The reader serves only IRs computed under the definition it is given: a
+  partition without the stamp raises ``StaleUploadError`` with code
+  ``MISSING_UPLOAD_LINEAGE``, one with another hash raises it with code
+  ``STALE_UPLOAD``; both messages name the remedy (re-run group-by-upload).
+  ``fetch`` reports the code per join part, the service answers 503 with it.
+- A selection GroupBy (no aggregations) has no upload tables; its fetch
+  takes an explicit snapshot frame in ``fetch_join``'s ``batch``.
 """
 
 from __future__ import annotations
@@ -52,6 +69,66 @@ from chronon_spark.plans import windows as W
 RES = "__res_ms"
 DAY_MS = W.MS_PER_DAY
 BRANCH = "__branch"  # 0 = collapsed, 1 = tail tile, 2 = streaming head
+
+
+UPLOAD_TABLES = ("upload_collapsed", "upload_tail")
+
+
+class StaleUploadError(RuntimeError):
+    """Uploaded IRs that this GroupBy definition may not lambda-merge:
+    ``code`` is ``STALE_UPLOAD`` (computed under another definition) or
+    ``MISSING_UPLOAD_LINEAGE`` (no definition stamp to verify)."""
+
+    def __init__(self, message: str, code: str = "STALE_UPLOAD"):
+        super().__init__(message)
+        self.code = code
+
+
+def write_upload_tables(
+    spark, root: str, gb: GroupBy, batch_end_ds: str, frames: tuple[DataFrame, DataFrame]
+) -> dict:
+    """Write ``gb``'s upload tables (module docstring); {suffix: table}."""
+    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+
+    tables = {}
+    for suffix, frame in zip(UPLOAD_TABLES, frames):
+        t = resolve_table(spark, root, f"{gb.name}_{suffix}")
+        insert_overwrite_partitions(frame.withColumn("ds", F.lit(batch_end_ds)), t)
+        t.write_lineage(batch_end_ds, {"semantic_hash": gb.semantic_hash()})
+        tables[suffix] = t
+    return tables
+
+
+def read_upload_tables(
+    spark, root: str, gb: GroupBy, batch_end_ds: str
+) -> tuple[DataFrame, DataFrame]:
+    """``gb``'s verified (collapsed, tail_tiles) at ``batch_end_ds``
+    (module docstring)."""
+    from chronon_spark.sources.tableio import resolve_table
+
+    if gb.aggregations is None:
+        raise ValueError(
+            f"selection part '{gb.name}' has no uploaded IR tables; "
+            "use operators.upload.fetch_join with a snapshot frame"
+        )
+    frames = []
+    for suffix in UPLOAD_TABLES:
+        t = resolve_table(spark, root, f"{gb.name}_{suffix}")
+        where = f"{gb.name}_{suffix}@{batch_end_ds}"
+        lin = (t.lineage(batch_end_ds) or {}).get("semantic_hash")
+        if lin is None:
+            raise StaleUploadError(
+                f"{where} has no upload lineage to verify against the current "
+                "definition — re-run group-by-upload",
+                code="MISSING_UPLOAD_LINEAGE",
+            )
+        if lin != gb.semantic_hash():
+            raise StaleUploadError(
+                f"{where}: uploaded hash {lin} != current definition "
+                f"{gb.semantic_hash()} — re-run group-by-upload"
+            )
+        frames.append(t.read(spark).where(F.col("ds") == batch_end_ds).drop("ds"))
+    return frames[0], frames[1]
 
 
 def _batch_end_ms(batch_end_ds: str) -> int:
@@ -84,13 +161,14 @@ def _check_aligned(w: Window | None, horizon_ms: int | None):
 
 
 def _pairs(gb: GroupBy, horizon_ms: int | None = None):
-    """(scalar_pairs, mg_pairs, dk_pairs): scalar pairs carry
-    ops.partial_cols slot IRs; mg pairs are APPROX_HISTOGRAM_K aggregations
-    served as bounded Misra-Gries map<string,bigint> IR columns; dk pairs
-    are TIME_DECAYED aggregations served as bounded halflife-bucket maps
-    (collapsed region) + unweighted tail-tile sums weighted at fetch time.
-    Slot indices number scalar pairs first, then mg, then dk, so IR column
-    names stay stable whichever mix a GroupBy declares."""
+    """(scalar_pairs, mg_slots, dk_slots): scalar (agg, window) pairs carry
+    ops.partial_cols slot IRs ``p{i}__*``; mg slots (``p{i}__mg``, agg,
+    window) are APPROX_HISTOGRAM_K aggregations served as bounded
+    Misra-Gries map<string,bigint> IR columns; dk slots (``p{i}``, agg,
+    window) are TIME_DECAYED aggregations served as bounded halflife-bucket
+    maps (collapsed region) + unweighted tail-tile sums weighted at fetch
+    time. Slot indices number scalar pairs first, then mg, then dk, so IR
+    column names stay stable whichever mix a GroupBy declares."""
     scalar, mg, dk = [], [], []
     for a in gb.aggregations:
         if a.operation in O.DECAYED_OPS and not a.buckets:
@@ -129,7 +207,12 @@ def _pairs(gb: GroupBy, horizon_ms: int | None = None):
         for w, _ in a.unpacked():
             _check_aligned(w, horizon_ms)
             scalar.append((a, w))
-    return scalar, mg, dk
+    n = len(scalar)
+    return (
+        scalar,
+        [(f"p{n + j}__mg", a, w) for j, (a, w) in enumerate(mg)],
+        [(f"p{n + len(mg) + j}", a, w) for j, (a, w) in enumerate(dk)],
+    )
 
 
 def _stable_lo(w: Window | None, batch_end: int, horizon_ms: int) -> int | None:
@@ -170,10 +253,8 @@ def upload_batch_irs(
     ev = _normalize_events(events, gb, tiebreak)
     batch_end = _batch_end_ms(batch_end_ds)
     ev = ev.where(F.col(ETS) < batch_end)
-    pairs, mg_pairs, dk_pairs = _pairs(gb, horizon_ms)
+    pairs, mg_slots, dk_slots = _pairs(gb, horizon_ms)
     tb = F.col(tiebreak) if tiebreak else F.lit(0)
-    mg_slots = [(f"p{len(pairs) + j}__mg", a, w) for j, (a, w) in enumerate(mg_pairs)]
-    dk_slots = _dk_slots(pairs, mg_pairs, dk_pairs)
 
     collapsed_exprs = {}
     for i, (a, w) in enumerate(pairs):
@@ -240,9 +321,7 @@ def upload_batch_irs(
     for h, idxs in sorted(by_hop.items()):
         lo = batch_end - max(pairs[i][1].millis for i in idxs)
         hi = max(_stable_lo(pairs[i][1], batch_end, horizon_ms) for i in idxs)
-        band = ev.where((F.col(ETS) >= lo) & (F.col(ETS) < hi)).withColumn(
-            TILE, W.round_down(F.col(ETS), h)
-        )
+        band = _band(ev, lo, hi, h)
         exprs = {}
         for i in idxs:
             a = pairs[i][0]
@@ -261,16 +340,17 @@ def upload_batch_irs(
     # MG tail tiles ride as their own rows (scalar slots null) — branch
     # merge at fetch time sums each slot over its non-null contributions,
     # so mixed-slot rows and dedicated rows are equivalent
-    for name, a, w in mg_slots:
-        if w is None:
-            continue
-        h = w.tail_hop_millis()
-        lo, hi = batch_end - w.millis, _stable_lo(w, batch_end, horizon_ms)
-        if hi <= lo:
-            continue
-        band = ev.where((F.col(ETS) >= lo) & (F.col(ETS) < hi)).withColumn(
-            TILE, W.round_down(F.col(ETS), h)
-        )
+    def tail_bands(slots):
+        # (slot, agg, hop, band) per windowed slot with a non-empty tail band
+        for slot, a, w in slots:
+            if w is None:
+                continue
+            h = w.tail_hop_millis()
+            lo, hi = batch_end - w.millis, _stable_lo(w, batch_end, horizon_ms)
+            if hi > lo:
+                yield slot, a, h, _band(ev, lo, hi, h)
+
+    for name, a, h, band in tail_bands(mg_slots):
         m = _mg_region_map(band, [*gb.keys, TILE], a, name)
         tile_frames.append(
             m.select(
@@ -288,16 +368,7 @@ def upload_batch_irs(
     # TIME_DECAYED tail tiles: unweighted per-tile sums (one halflife bucket
     # per tile by the _pairs alignment contract) — the request-time weight
     # is applied entirely at fetch from the tile start
-    for slot, a, w in dk_slots:
-        if w is None:
-            continue
-        h = w.tail_hop_millis()
-        lo, hi = batch_end - w.millis, _stable_lo(w, batch_end, horizon_ms)
-        if hi <= lo:
-            continue
-        band = ev.where((F.col(ETS) >= lo) & (F.col(ETS) < hi)).withColumn(
-            TILE, W.round_down(F.col(ETS), h)
-        )
+    for slot, a, h, band in tail_bands(dk_slots):
         name = f"{slot}__ts"
         t = (
             band.where(F.col(a.input_column).isNotNull())
@@ -340,6 +411,13 @@ def upload_batch_irs(
     return collapsed, tiles
 
 
+def _band(ev: DataFrame, lo: int, hi: int, h: int) -> DataFrame:
+    """Events in [lo, hi), each stamped with its hop-``h`` tile start."""
+    return ev.where((F.col(ETS) >= lo) & (F.col(ETS) < hi)).withColumn(
+        TILE, W.round_down(F.col(ETS), h)
+    )
+
+
 def _mg_region_map(region: DataFrame, group_cols: list[str], a: Aggregation, out_name: str) -> DataFrame:
     """Misra-Gries map IR over one region: exact distributed value counts,
     MG-compressed to ``a.mg_cap`` rows per group, folded to one
@@ -356,13 +434,6 @@ def _mg_region_map(region: DataFrame, group_cols: list[str], a: Aggregation, out
     return HH.summary_map(comp, group_cols, "__mg_v").withColumnRenamed(
         "__mg_map", out_name
     )
-
-
-def _dk_slots(pairs, mg_pairs, dk_pairs):
-    """(slot, agg, window) for TIME_DECAYED pairs; slot indices follow the
-    scalar + mg blocks so IR column names are stable."""
-    base = len(pairs) + len(mg_pairs)
-    return [(f"p{base + j}", a, w) for j, (a, w) in enumerate(dk_pairs)]
 
 
 def _dk_sum_type(ev: DataFrame, a: Aggregation) -> str:
@@ -442,9 +513,7 @@ def fetch_features(
     lambdaAggregateIr)."""
     assert gb.accuracy == Accuracy.TEMPORAL
     batch_end = _batch_end_ms(batch_end_ds)
-    pairs, mg_pairs, dk_pairs = _pairs(gb, horizon_ms)
-    mg_slots = [(f"p{len(pairs) + j}__mg", a, w) for j, (a, w) in enumerate(mg_pairs)]
-    dk_slots = _dk_slots(pairs, mg_pairs, dk_pairs)
+    pairs, mg_slots, dk_slots = _pairs(gb, horizon_ms)
     tb = F.col(tiebreak) if tiebreak else F.lit(0)
 
     left_n = requests.withColumn(QTS, W.ts_to_millis(requests, left_time_column))
@@ -559,17 +628,18 @@ def fetch_features(
     for b in branches[1:]:
         unioned = unioned.unionByName(b)
 
+    def _in_band(w):
+        # a tail tile of w's resolution inside the request's sawtooth window
+        return (
+            (F.col(BRANCH) == 1)
+            & (F.col(RES) == w.tail_hop_millis())
+            & (F.col(TILE) >= W.sawtooth_tail(F.col(QTS), w))
+            & (F.col(TILE) < F.lit(_stable_lo(w, batch_end, horizon_ms)))
+        )
+
     def _include(w):
         inc = (F.col(BRANCH) == 0) | (F.col(BRANCH) == 2)
-        if w is not None:
-            lo = _stable_lo(w, batch_end, horizon_ms)
-            inc = inc | (
-                (F.col(BRANCH) == 1)
-                & (F.col(RES) == w.tail_hop_millis())
-                & (F.col(TILE) >= W.sawtooth_tail(F.col(QTS), w))
-                & (F.col(TILE) < F.lit(lo))
-            )
-        return inc
+        return inc if w is None else inc | _in_band(w)
 
     merge_exprs = []
     for i, (a, w) in enumerate(pairs):
@@ -607,15 +677,8 @@ def fetch_features(
         )
         parts = [col_part]
         if w is not None:
-            lo = _stable_lo(w, batch_end, horizon_ms)
-            inc_t = (
-                (F.col(BRANCH) == 1)
-                & (F.col(RES) == w.tail_hop_millis())
-                & (F.col(TILE) >= W.sawtooth_tail(F.col(QTS), w))
-                & (F.col(TILE) < F.lit(lo))
-            )
             w_tile = O.decayed_weight(a, F.col(QTS), F.col(TILE))
-            parts.append(F.sum(F.when(inc_t, F.col(f"{slot}__ts") * w_tile)))
+            parts.append(F.sum(F.when(_in_band(w), F.col(f"{slot}__ts") * w_tile)))
         parts.append(F.sum(F.col(f"{slot}__hs")))
         all_null = parts[0].isNull()
         for p in parts[1:]:
@@ -681,28 +744,26 @@ def fetch_join(
     batch_end_ds: str,
     horizon_ms: int = DAY_MS,
     tiebreak: str | None = None,
+    external_registry=None,
 ) -> DataFrame:
-    """Fetcher.fetchJoin, offline-simulated: for every join part, lambda-merge
-    its uploaded batch IRs (collapsed + tail tiles from ``upload_batch_irs``)
-    with its streaming events, prefix the features, and coalesce them onto
-    the request frame — the online twin of ``compute_join``, value-identical
-    to running it over each part's unified batch+stream log.
+    """Fetcher.fetchJoin, offline-simulated: lambda-merge every part's
+    uploaded batch IRs with its stream, then assemble exactly as
+    ``compute_join`` does (``join.assemble_join``) — value-identical to it
+    over each part's unified batch+stream log.
 
-    ``batch`` maps GroupBy name -> (collapsed, tail_tiles); ``streams`` maps
-    GroupBy name -> post-batch-end event frame. Key mappings and prefixes
-    follow the same flip/rename rules as the offline join (reference
-    online/.../FetcherBase.scala fetchJoin + api Extensions.scala:745-766).
+    ``batch`` maps GroupBy name -> (collapsed, tail_tiles), or a selection
+    part's snapshot frame; ``streams`` maps GroupBy name -> post-batch-end
+    events. External parts come from ``external_registry``, degrading
+    gracefully (a failing source yields an ``ext_{name}_exception`` value,
+    reference fetchJoin); without one they are left out.
     """
-    from chronon_spark.operators.join import coalesced_join
+    from chronon_spark.operators.join import assemble_join, part_output, part_query
 
-    out = requests
     tc = join.time_column
+    feats = []
     for part in join.join_parts:
         gb = part.group_by
-        lkeys = part.left_keys()
-        q = requests.select(
-            *[F.col(lk).alias(rk) for lk, rk in zip(lkeys, gb.keys)], F.col(tc)
-        ).dropDuplicates()
+        q = part_query(requests, part, tc)
         if gb.aggregations is None:
             # selection part: online the fetcher serves the LATEST uploaded
             # entity snapshot's non-key fields to every request (reference
@@ -731,12 +792,11 @@ def fetch_join(
                 q, collapsed, tail, streams[gb.name], gb, batch_end_ds,
                 horizon_ms=horizon_ms, left_time_column=tc, tiebreak=tiebreak,
             )
-        prefix = part.full_prefix()
-        for c in feat.columns:
-            if c not in (*gb.keys, tc):
-                feat = feat.withColumnRenamed(c, f"{prefix}_{c}")
-        for lk, rk in zip(lkeys, gb.keys):
-            if lk != rk:
-                feat = feat.withColumnRenamed(rk, lk)
-        out = coalesced_join(out, feat, [*lkeys, tc])
-    return out
+        feats.append((part, part_output(feat, part, tc)))
+
+    def externals(out, parts):
+        if external_registry is None:
+            return out
+        return external_registry.enrich(out, parts, graceful=True)
+
+    return assemble_join(requests, feats, join, externals)

@@ -12,9 +12,10 @@ HTTP batch becomes ONE small request DataFrame, and the whole lambda merge
 — so a 10k-key scoring POST costs one job, not 10k point lookups.
 
 Status mapping: ``UnknownEntityError`` (join/GroupBy) -> 404, bad body -> 400,
-``StaleUploadError`` (uploaded IRs don't match the serving definition) ->
-503 with the re-upload remedy — the staleness guard surfaces as a 5xx
-instead of silently serving wrong features. Everything else -> 500.
+``StaleUploadError`` (uploaded IRs don't match the serving definition, or
+carry no definition stamp) -> 503 with the error's code and the re-upload
+remedy — the staleness guard surfaces as a 5xx instead of silently serving
+wrong features. Everything else -> 500.
 
 Serving via CLI: ``python -m chronon_spark serve --conf <module> --upload-root
 <root> --batch-end-ds <ds> --port 0`` prints one JSON line
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from chronon_spark.api import JoinPart
 from chronon_spark.online import Fetcher, StaleUploadError
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
@@ -153,20 +155,21 @@ class FeatureService:
 
     # -- fetch paths -----------------------------------------------------
 
-    def fetch_join_rows(self, name: str, rows: list[dict]) -> list[dict]:
-        if name not in self.joins:
-            raise UnknownEntityError(f"unknown join '{name}'; serving: {sorted(self.joins)}")
-        join = self.joins[name]
-        missing = [
-            p.group_by.name for p in join.join_parts if p.group_by.name not in self.streams
-        ]
+    def _check_streams(self, gbs) -> None:
+        missing = [gb.name for gb in gbs if gb.name not in self.streams]
         if missing:
             # server-side configuration gap (lambda's online leg absent), not
             # a client error: surfaces as 500, never 404
             raise RuntimeError(
-                f"service has no stream frame for join part(s) {missing}; "
+                f"service has no stream frame for GroupBy(s) {missing}; "
                 "pass streams={name: post-batch-end frame} at construction"
             )
+
+    def fetch_join_rows(self, name: str, rows: list[dict]) -> list[dict]:
+        if name not in self.joins:
+            raise UnknownEntityError(f"unknown join '{name}'; serving: {sorted(self.joins)}")
+        join = self.joins[name]
+        self._check_streams([p.group_by for p in join.join_parts])
         with self._lock:
             key_types = self._key_types(join.join_parts)
             req = self._requests_df(rows, key_types, join.time_column)
@@ -187,15 +190,9 @@ class FeatureService:
                 f"unknown GroupBy '{name}'; serving: {sorted(self.group_bys)}"
             )
         gb = self.group_bys[name]
-        if gb.name not in self.streams:
-            raise RuntimeError(
-                f"service has no stream frame for GroupBy '{gb.name}'; "
-                "pass streams={name: post-batch-end frame} at construction"
-            )
+        self._check_streams([gb])
         with self._lock:
-            collapsed, _ = self.fetcher.batch_frames(gb, self.batch_end_ds)
-            types = {f.name: f.dataType for f in collapsed.schema.fields}
-            key_types = {k: types[k] for k in gb.keys}
+            key_types = self._key_types([JoinPart(group_by=gb)])
             req = self._requests_df(rows, key_types, gb.time_column)
             out = self.fetcher.fetch_features(
                 req, self.streams[gb.name], gb, self.batch_end_ds, tiebreak=self.tiebreak
@@ -272,7 +269,7 @@ class FeatureService:
                 except StaleUploadError as e:
                     # the staleness guard is a SERVING failure, not a client
                     # one: 503 + remedy, never silently-wrong features
-                    self._send(503, {"error": str(e), "code": "STALE_UPLOAD"})
+                    self._send(503, {"error": str(e), "code": e.code})
                 except Exception as e:  # noqa: BLE001 — boundary: report, don't die
                     self._send(500, {"error": f"{type(e).__name__}: {e}"})
 

@@ -559,7 +559,10 @@ def backfill(
         obs = Observation(f"backfill_{lo}_{hi}")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
         insert_overwrite_partitions(out, table)
-        rows = obs.get["rows"]
+        # when AQE proves the chunk empty mid-query it drops the observed
+        # node from the write plan, and the observation completes with an
+        # empty row instead of a zero count
+        rows = obs.get["rows"] if obs._jo.getRow().length() else 0
         # the chunk is materialized: release estimator-internal cached frames
         # (tile tables, query frames) so a long chunked backfill does not
         # accumulate dead cache blocks across chunks

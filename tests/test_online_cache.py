@@ -114,8 +114,7 @@ def test_metrics_tagged_counters_and_distributions():
 def upload_env(spark, events, tmp_path_factory):
     """group-by-upload-shaped tables (IR frames + lineage hash) under a
     tmp upload root, plus the batch/stream/request split."""
-    from chronon_spark.operators.upload import upload_batch_irs
-    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+    from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
 
     root = str(tmp_path_factory.mktemp("uploads"))
     d = F.date_format("ts", "yyyy-MM-dd")
@@ -138,11 +137,8 @@ def upload_env(spark, events, tmp_path_factory):
             Aggregation(Op.SUM, "value", windows=(W1D,)),
         ],
     )
-    collapsed, tail = upload_batch_irs(batch, gb, batch_end_ds, tiebreak="event_id")
-    for suffix, frame in (("upload_collapsed", collapsed), ("upload_tail", tail)):
-        t = resolve_table(spark, root, f"{gb.name}_{suffix}")
-        insert_overwrite_partitions(frame.withColumn("ds", F.lit(batch_end_ds)), t)
-        t.write_lineage(batch_end_ds, {"semantic_hash": gb.semantic_hash()})
+    frames = upload_batch_irs(batch, gb, batch_end_ds, tiebreak="event_id")
+    write_upload_tables(spark, root, gb, batch_end_ds, frames)
     return root, gb, batch_end_ds, stream, requests
 
 
@@ -194,6 +190,15 @@ def test_fetcher_rejects_stale_definition(spark, upload_env):
     # the failure is NOT cached as a frame: a fixed definition loads fine
     out = f.fetch_features(requests, stream, gb, batch_end_ds, tiebreak="event_id")
     assert out.count() == requests.count()
+
+
+def test_batch_frames_rejects_selection_groupby(spark, upload_env):
+    """A selection GroupBy (no aggregations) has no upload tables: the
+    reader says so instead of reporting a missing upload lineage."""
+    root, _gb, batch_end_ds, *_ = upload_env
+    sel = GroupBy(name="users", keys=["user_id"], aggregations=None)
+    with pytest.raises(ValueError, match="selection part 'users'"):
+        Fetcher(spark, root).batch_frames(sel, batch_end_ds)
 
 
 def test_fetcher_eviction_unpersists(spark, upload_env):

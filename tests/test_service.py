@@ -44,8 +44,7 @@ JOIN = Join(name="svc_join", left_keys=["user_id"], join_parts=[JoinPart(group_b
 def served(spark, events, tmp_path_factory):
     """Upload tables + a running HTTP service; yields (svc, base_url,
     fetcher, stream, requests, batch_end_ds)."""
-    from chronon_spark.operators.upload import upload_batch_irs
-    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+    from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
 
     root = str(tmp_path_factory.mktemp("svc_uploads"))
     d = F.date_format("ts", "yyyy-MM-dd")
@@ -53,11 +52,8 @@ def served(spark, events, tmp_path_factory):
     batch_end_ds, serve_day = days[7], days[8]
     batch = events.where(d <= batch_end_ds)
     stream = events.where(d == serve_day)
-    collapsed, tail = upload_batch_irs(batch, GB, batch_end_ds, tiebreak="event_id")
-    for suffix, frame in (("upload_collapsed", collapsed), ("upload_tail", tail)):
-        t = resolve_table(spark, root, f"{GB.name}_{suffix}")
-        insert_overwrite_partitions(frame.withColumn("ds", F.lit(batch_end_ds)), t)
-        t.write_lineage(batch_end_ds, {"semantic_hash": GB.semantic_hash()})
+    frames = upload_batch_irs(batch, GB, batch_end_ds, tiebreak="event_id")
+    write_upload_tables(spark, root, GB, batch_end_ds, frames)
 
     requests = (
         events.where((d == serve_day) & (F.col("event_type") == "purchase"))
@@ -250,6 +246,24 @@ def test_stale_definition_surfaces_as_503(spark, served):
         assert body["code"] == "STALE_UPLOAD" and "re-run group-by-upload" in body["error"]
     finally:
         svc.joins.pop("stale_join", None)
+
+
+def test_missing_upload_lineage_is_503_with_its_code(spark, served, tmp_path, monkeypatch):
+    """Upload tables without a lineage stamp answer 503 with their own code
+    and remedy, not a 'hash None' staleness claim."""
+    import shutil
+
+    svc, base, fetcher, *_ = served
+    root = tmp_path / "unstamped"
+    shutil.copytree(fetcher.upload_root, root)
+    for d in root.iterdir():
+        shutil.rmtree(d / "_lineage", ignore_errors=True)
+    monkeypatch.setattr(svc, "fetcher", Fetcher(spark, str(root)))
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(f"{base}/v1/features/join/{JOIN.name}", [{"user_id": 1}])
+    assert e.value.code == 503
+    body = json.loads(e.value.read())
+    assert body["code"] == "MISSING_UPLOAD_LINEAGE" and "re-run" in body["error"]
 
 
 SERVE_CONF = """

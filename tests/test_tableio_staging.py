@@ -191,6 +191,19 @@ def test_backfill_single_job_per_chunk(spark, tmp_table, monkeypatch):
     assert tmp_table.read(spark).count() == 15
 
 
+def test_backfill_counts_a_chunk_aqe_proves_empty(spark, tmp_table):
+    """A chunk whose rows AQE finds empty at run time (the empty side of a
+    left join) records 0 rows instead of failing on the observed count."""
+    keys = spark.range(100).withColumn("k", F.col("id") % 10)
+
+    def compute(s, lo, hi):
+        empty = keys.where("id < 0").withColumn("ds", F.lit(lo))
+        return empty.join(keys.select("k", F.col("id").alias("x")), "k", "left")
+
+    recs = backfill(spark, tmp_table, compute, "2024-01-01", "2024-01-01", "h")
+    assert [r["rows"] for r in recs] == [0]
+
+
 def test_schema_evolution_append_only(spark, tmp_table):
     """Adding a column is fine (old partitions read null via mergeSchema);
     dropping or retyping one is rejected BEFORE any data moves (reference

@@ -199,6 +199,42 @@ def test_fetch_join_equals_compute_join(spark, events, split):
     assert got.count() == left.count()
 
 
+def test_fetch_join_applies_join_derivations(spark, events, split, tmp_path):
+    """Join-level derivations run last online too: fetch_join and the
+    caching Fetcher.fetch_join equal compute_join over the unified log in
+    both columns and values."""
+    from chronon_spark.api import Join, JoinPart
+    from chronon_spark.online import Fetcher
+    from chronon_spark.operators.join import compute_join
+    from chronon_spark.operators.upload import fetch_join, write_upload_tables
+
+    batch, stream, requests, batch_end_ds = split
+    gb = GroupBy(
+        name="user_stats",
+        keys=["user_id"],
+        aggregations=[Aggregation(Op.COUNT, "value", windows=(W7D,))],
+    )
+    j = Join(
+        name="derived_join",
+        left_keys=["user_id"],
+        join_parts=[JoinPart(group_by=gb)],
+        derivations={"cnt_x2": "user_stats_value_count_7d * 2"},
+    )
+    frames = upload_batch_irs(batch, gb, batch_end_ds, tiebreak="event_id")
+    write_upload_tables(spark, str(tmp_path), gb, batch_end_ds, frames)
+    want = compute_join(requests, {gb.name: events}, j, tiebreak="event_id")
+    got = fetch_join(
+        requests, {gb.name: frames}, {gb.name: stream}, j, batch_end_ds, tiebreak="event_id"
+    )
+    served = Fetcher(spark, str(tmp_path)).fetch_join(
+        requests, {gb.name: stream}, j, batch_end_ds, tiebreak="event_id"
+    )
+    assert want.columns == ["user_id", "ts", "cnt_x2"]
+    for out in (got, served):
+        assert out.columns == want.columns
+        assert _rows(out, want.columns) == _rows(want, want.columns)
+
+
 def test_fetch_join_serves_selection_parts(spark, events, split):
     """A no-aggregation (selection) part in a served join reads the latest
     uploaded entity snapshot's fields (reference FetcherBase entity

@@ -361,7 +361,11 @@ def cmd_log_flattener(spark, conf, args) -> dict:
     from pyspark.sql import functions as F
 
     from chronon_spark.operators.logflatten import flatten_logs
-    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+    from chronon_spark.sources.tableio import (
+        insert_overwrite_partitions,
+        observed_rows,
+        resolve_table,
+    )
 
     logs = conf.logs(spark)
     flat = flatten_logs(logs, conf.schemas, join_name=_opt(conf, "join_name"))
@@ -384,7 +388,7 @@ def cmd_log_flattener(spark, conf, args) -> dict:
         "output_table": _table_id(table),
         "partitions": table.partitions(),
         "raw_rows": logs.count(),
-        "flattened_rows": obs.get["flattened_rows"],
+        "flattened_rows": observed_rows(obs, "flattened_rows"),
     }
 
 
@@ -444,7 +448,11 @@ def cmd_fetch(spark, conf, args) -> dict:
     from pyspark.sql import functions as F
 
     from chronon_spark.operators.upload import StaleUploadError, fetch_join, read_upload_tables
-    from chronon_spark.sources.tableio import insert_overwrite_partitions, resolve_table
+    from chronon_spark.sources.tableio import (
+        insert_overwrite_partitions,
+        observed_rows,
+        resolve_table,
+    )
 
     join = conf.join
     batch, errors = {}, []
@@ -472,7 +480,7 @@ def cmd_fetch(spark, conf, args) -> dict:
         "command": "fetch",
         "output_table": _table_id(table),
         "batch_end_ds": args.batch_end_ds,
-        "rows": obs.get["rows"],
+        "rows": observed_rows(obs, "rows"),
     }
 
 

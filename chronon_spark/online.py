@@ -7,12 +7,16 @@ named bounded LRU cache (LRUCache.scala:19-40), a batch-IR cache keyed
 (dataset, keys, batchEndTsMillis) that spares the KV store repeated decode
 work (FetcherCache.scala:26-113), and tagged counters/gauges/distributions
 (Metrics.scala Context). This module is the Spark-first analog: the "KV
-rows" here are the uploaded IR FRAMES (group-by-upload's collapsed + tail
+rows" here are the uploaded IR tables (group-by-upload's collapsed + tail
 tables), so the batch-IR cache holds verified, persisted DataFrames keyed by
 (GroupBy name, semantic hash, batch_end_ds) — one read + one lineage check
 per definition per batch day, however many fetch calls a long-lived serving
-session makes. Caches are in-process (one serving JVM/driver), deliberately:
-cross-process sharing is the KV store's job, not the cache's.
+session makes. Under the same key the Fetcher collects those tables (and
+each stream frame) once into an in-memory, key-indexed store
+(``operators/local_merge.py``) and answers every fetch by merging it in
+Python, the way the reference fetcher merges KV rows in-process: a fetch
+runs no Spark job. Caches are in-process (one serving JVM/driver),
+deliberately: cross-process sharing is the KV store's job, not the cache's.
 """
 
 from __future__ import annotations
@@ -23,8 +27,18 @@ from collections import OrderedDict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from chronon_spark.operators.upload import StaleUploadError, read_upload_tables
+from chronon_spark.operators.groupby import apply_derivations
+from chronon_spark.operators.local_merge import (
+    IRStore,
+    StreamEvents,
+    collect_events,
+    epoch_ms,
+    feature_fields,
+    local_frame,
+)
+from chronon_spark.operators.upload import DAY_MS, StaleUploadError, read_upload_tables
 
 
 # ---------------------------------------------------------------------------
@@ -235,11 +249,16 @@ class Metrics:
 
 
 class Fetcher:
-    """Serving-session fetch front-end (reference Fetcher + FetcherCache):
-    each GroupBy's upload tables (contract: ``operators/upload.py``) are
-    read and verified once per (definition, batch day), persisted, and
-    reused by every later fetch — the batch-IR cache. Metrics record
-    requests, cache hits/misses, and staleness rejections."""
+    """Serving-session fetch front-end (reference Fetcher + FetcherCache).
+    Each GroupBy's upload tables (contract: ``operators/upload.py``) are
+    read, verified and persisted once per (definition, batch day) — the
+    batch-IR cache — and collected under the same key into an in-memory
+    ``local_merge.IRStore``. ``fetch_features``/``fetch_join`` merge a
+    request's keys against that store in-process, so a fetch runs no Spark
+    job once the store is loaded; ``operators.upload.fetch_join`` stays the
+    distributed (``fetch`` CLI) form. Metrics record requests, cache
+    hits/misses, staleness rejections, store loads (``fetch.load_ms``) and
+    merges (``fetch.merge_ms``)."""
 
     def __init__(
         self,
@@ -252,11 +271,15 @@ class Fetcher:
         self.upload_root = upload_root
         self.metrics = metrics or Metrics()
         self._ir_cache = LRUCache("batch_ir", batch_ir_cache_size)
+        self._stores: dict = {}
+        self._ir_cache._on_evict = self._evict
+
+    def _evict(self, key, frames) -> None:
         # evicted frames release their executor memory immediately instead
         # of waiting for GC of the python wrapper
-        self._ir_cache._on_evict = lambda _k, frames: [
-            f.unpersist() for f in frames
-        ]
+        for f in frames:
+            f.unpersist()
+        self._stores.pop(key, None)
 
     def _load_batch_frames(self, gb, batch_end_ds: str) -> tuple[DataFrame, DataFrame]:
         try:
@@ -276,54 +299,211 @@ class Fetcher:
         self.metrics.increment(ctx, "cache.hit" if was_hit else "cache.miss")
         return frames
 
+    def _timed_load(self, gb, load):
+        t0 = time.perf_counter()
+        out = load()
+        ctx = Context("group_by.fetching", group_by=gb.name)
+        self.metrics.distribution(ctx, "fetch.load_ms", (time.perf_counter() - t0) * 1000)
+        return out
+
+    def store(self, gb, batch_end_ds: str) -> IRStore:
+        """``gb``'s key-indexed IR store, built from ``batch_frames`` once per
+        (definition, batch day) and dropped when those frames are evicted."""
+        frames = self.batch_frames(gb, batch_end_ds)
+        key = (gb.name, gb.semantic_hash(), batch_end_ds)
+        if key not in self._stores:
+            self._stores[key] = self._timed_load(gb, lambda: IRStore(gb, batch_end_ds, frames))
+        return self._stores[key]
+
+    def _load(self, gb, batch_end_ds, stream, tiebreak, horizon_ms) -> tuple[IRStore, StreamEvents]:
+        store = self.store(gb, batch_end_ds)
+        key = (id(stream), tiebreak, horizon_ms)
+        if key not in store.streams:
+            store.streams[key] = (
+                stream,
+                self._timed_load(gb, lambda: collect_events(store, stream, tiebreak, horizon_ms)),
+            )
+        return store, store.streams[key][1]
+
+    def _fields(self, store, stream, events, tiebreak, horizon_ms) -> dict[str, T.StructField]:
+        if events.fields is None:
+            events.fields = feature_fields(self.spark, store, stream, tiebreak, horizon_ms)
+        return {f.name: f for f in events.fields}
+
+    def _request_schema(self, rows, parts, tc: str) -> T.StructType:
+        """Types of service request rows (keys typed like the uploaded IRs,
+        the time column a timestamp) for the typed frames derivations and
+        external parts run over."""
+        fields = {tc: T.StructField(tc, T.TimestampType())}
+        for lks, store in parts:
+            collapsed = store.frames[0].schema
+            for lk, rk in zip(lks, store.gb.keys):
+                fields.setdefault(lk, T.StructField(lk, collapsed[rk].dataType))
+        return T.StructType([fields[c] for c in (rows[0] if rows else fields)])
+
+    @staticmethod
+    def _merged(store, events, rows, cols, tc, horizon_ms) -> list[list]:
+        """Feature values per request row, merging each distinct (keys, ts)
+        once."""
+        qs = [(tuple(r[c] for c in cols), epoch_ms(r[tc])) for r in rows]
+        merged = store.merge(events, set(qs), horizon_ms)
+        return [merged[q] for q in qs]
+
     def fetch_features(
         self,
-        requests: DataFrame,
+        requests,
         stream: DataFrame,
         gb,
         batch_end_ds: str,
-        **kwargs,
-    ) -> DataFrame:
-        from chronon_spark.operators.upload import fetch_features
-
+        horizon_ms: int = DAY_MS,
+        left_time_column: str = "ts",
+        tiebreak: str | None = None,
+    ):
+        """``operators.upload.fetch_features`` answered from the IR store.
+        ``requests`` is a DataFrame (collected; returns a local DataFrame of
+        the Spark plan's schema) or a list of row dicts (returns row
+        dicts)."""
         ctx = Context("group_by.fetching", group_by=gb.name)
         self.metrics.increment(ctx, "fetch.requests")
-        t0 = time.time()
         try:
-            collapsed, tail = self.batch_frames(gb, batch_end_ds)
-            out = fetch_features(
-                requests, collapsed, tail, stream, gb, batch_end_ds, **kwargs
-            )
+            rows, schema = _collect(requests)
+            store, events = self._load(gb, batch_end_ds, stream, tiebreak, horizon_ms)
+            t0 = time.perf_counter()
+            keys, tc = gb.keys, left_time_column
+            names = store.names(horizon_ms)
+            vals = self._merged(store, events, rows, keys, tc, horizon_ms)
+            # the Spark plan's order: keys, the other request columns, features
+            out = [
+                {**{k: r[k] for k in keys}, **r, **dict(zip(names, v))}
+                for r, v in zip(rows, vals)
+            ]
+            if schema is not None or gb.derivations:
+                left = schema or self._request_schema(rows, [(keys, store)], tc)
+                feats = self._fields(store, stream, events, tiebreak, horizon_ms)
+                frame = local_frame(self.spark, out, T.StructType(
+                    [left[k] for k in keys]
+                    + [f for f in left.fields if f.name not in keys]
+                    + [feats[n] for n in names]
+                ))
+                frame = apply_derivations(frame, gb.derivations, keep=left.names)
+                out = frame if schema is not None else _dicts(frame)
         except Exception as exc:
             self.metrics.increment_exception(ctx, exc)
             raise
-        self.metrics.distribution(ctx, "fetch.plan_ms", (time.time() - t0) * 1000)
+        self.metrics.distribution(ctx, "fetch.merge_ms", (time.perf_counter() - t0) * 1000)
         return out
 
     def fetch_join(
         self,
-        requests: DataFrame,
+        requests,
         streams: dict[str, DataFrame],
         join,
         batch_end_ds: str,
-        **kwargs,
-    ) -> DataFrame:
-        """``operators.upload.fetch_join`` over the cached, verified part
-        IRs; keyword arguments (``external_registry``, ``tiebreak``, ...)
-        pass through."""
-        from chronon_spark.operators.upload import fetch_join
-
+        horizon_ms: int = DAY_MS,
+        tiebreak: str | None = None,
+        external_registry=None,
+    ):
+        """``operators.upload.fetch_join`` answered from the IR stores:
+        each part merged in-process, then prefixed, key-flipped and joined
+        onto the request rows in ``join.assemble_join``'s order. GroupBy or
+        join derivations and external parts (with ``external_registry``)
+        finish through ``apply_derivations`` and the registry's ``enrich``
+        over a local frame of the merged rows. ``requests``: as in
+        ``fetch_features``."""
         ctx = Context("join.fetching", join=join.name)
         self.metrics.increment(ctx, "fetch.requests")
-        batch = {
-            p.group_by.name: self.batch_frames(p.group_by, batch_end_ds)
-            for p in join.join_parts
-        }
         try:
-            return fetch_join(requests, batch, streams, join, batch_end_ds, **kwargs)
+            rows, schema = _collect(requests)
+            parts = [
+                (p, *self._load(p.group_by, batch_end_ds, streams[p.group_by.name], tiebreak, horizon_ms))
+                for p in join.join_parts
+            ]
+            t0 = time.perf_counter()
+            tc = join.time_column
+            ext = bool(join.external_parts) and external_registry is not None
+            typed = (
+                schema is not None or ext or bool(join.derivations)
+                or any(p.group_by.derivations for p in join.join_parts)
+            )
+            if typed and schema is None:
+                schema = self._request_schema(
+                    rows, [(p.left_keys(), store) for p, store, _ev in parts], tc
+                )
+            fields = {f.name: f for f in schema.fields} if typed else {}
+            order = schema.names if typed else list(rows[0]) if rows else []
+            left_cols = list(order)
+            out = [dict(r) for r in rows]
+            for part, store, events in parts:
+                gb, lks = part.group_by, part.left_keys()
+                stream = streams[gb.name]
+                names = store.names(horizon_ms)
+                vals = self._merged(store, events, rows, lks, tc, horizon_ms)
+                if typed:
+                    feats = self._fields(store, stream, events, tiebreak, horizon_ms)
+                    types = [feats[n] for n in names]
+                    if gb.derivations:
+                        names, types, vals = self._derive(gb, lks, tc, fields, types, rows, vals)
+                prefix = part.full_prefix()
+                pnames = [f"{prefix}_{n}" for n in names]
+                # join.coalesced_join: keys first, then the left columns, then
+                # the part's columns; a column on both sides coalesces
+                keys = [*lks, tc]
+                shared = (set(order) & set(pnames)) - set(keys)
+                order = keys + [c for c in order if c not in keys] + [
+                    c for c in pnames if c not in shared
+                ]
+                for r, v in zip(out, vals):
+                    for n, x in zip(pnames, v):
+                        if n not in shared or r[n] is None:
+                            r[n] = x
+                if typed:
+                    for n, f in zip(pnames, types):
+                        fields.setdefault(n, T.StructField(n, f.dataType, True))
+            out = [{c: r[c] for c in order} for r in out]
+            if typed:
+                frame = local_frame(self.spark, out, T.StructType([fields[c] for c in order]))
+                if ext:
+                    frame = external_registry.enrich(frame, join.external_parts, graceful=True)
+                frame = apply_derivations(frame, join.derivations, keep=left_cols)
+                out = frame if isinstance(requests, DataFrame) else _dicts(frame)
         except Exception as exc:
             self.metrics.increment_exception(ctx, exc)
             raise
+        self.metrics.distribution(ctx, "fetch.merge_ms", (time.perf_counter() - t0) * 1000)
+        return out
+
+    def _derive(self, gb, lks, tc, fields, types, rows, vals):
+        """A part's GroupBy derivations over a local frame of its query rows
+        (GroupBy keys, time, features), as ``fetch_features`` applies them;
+        returns the derived (names, fields, values)."""
+        keys = gb.keys
+        part_rows = [
+            {**{rk: r[lk] for lk, rk in zip(lks, keys)}, tc: r[tc],
+             **{f.name: x for f, x in zip(types, v)}}
+            for r, v in zip(rows, vals)
+        ]
+        schema = T.StructType(
+            [T.StructField(rk, fields[lk].dataType) for lk, rk in zip(lks, keys)]
+            + [fields[tc], *types]
+        )
+        frame = apply_derivations(
+            local_frame(self.spark, part_rows, schema), gb.derivations, keep=[*keys, tc]
+        )
+        derived = [f for f in frame.schema.fields if f.name not in (*keys, tc)]
+        got = [[r[f.name] for f in derived] for r in frame.collect()]
+        return [f.name for f in derived], derived, got
+
+
+def _collect(requests) -> tuple[list[dict], T.StructType | None]:
+    """(row dicts, schema): a DataFrame is collected; row dicts pass
+    through with no schema."""
+    if isinstance(requests, DataFrame):
+        return [r.asDict(recursive=False) for r in requests.collect()], requests.schema
+    return requests, None
+
+
+def _dicts(frame: DataFrame) -> list[dict]:
+    return [r.asDict(recursive=False) for r in frame.collect()]
 
 
 # ---------------------------------------------------------------------------

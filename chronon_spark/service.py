@@ -5,17 +5,23 @@ The reference ships a Vert.x web service wrapping its Fetcher
 handlers/FeaturesHandler.java: POST /v*/features/{join|groupby}/:name with a
 JSON array of entity-key maps, responding GetFeaturesResponse — per-request
 ``{"status": "Success"|"Failure", "entityKeys": {...}, "features": {...}}``
-— plus GET /ping). This is the Spark-first analog: the serving "driver" is a
-long-lived SparkSession holding the Fetcher's verified batch-IR cache, each
-HTTP batch becomes ONE small request DataFrame, and the whole lambda merge
-(collapsed IRs + tail tiles + stream) runs as a single Spark plan per batch
-— so a 10k-key scoring POST costs one job, not 10k point lookups.
+— plus GET /ping). Here the serving process is a long-lived SparkSession
+whose Fetcher holds each GroupBy's verified upload tables and stream events
+in an in-memory, key-indexed store (``operators/local_merge.py``),
+loaded by Spark jobs once per (definition, batch day). Each HTTP batch
+becomes typed Python request rows, and the lambda merge (collapsed IRs +
+tail tiles + stream) runs in-process over the store: a served request runs
+no Spark job. The ops served this way are ``local_merge.SERVED_OPS``; a
+configured join or GroupBy with any other op stops the service at
+construction, and one added later answers 500 naming the op (the ``fetch``
+CLI serves every op).
 
 Status mapping: ``UnknownEntityError`` (join/GroupBy) -> 404, bad body -> 400,
 ``StaleUploadError`` (uploaded IRs don't match the serving definition, or
 carry no definition stamp) -> 503 with the error's code and the re-upload
 remedy — the staleness guard surfaces as a 5xx instead of silently serving
-wrong features. Everything else -> 500.
+wrong features. Everything else -> 500. ``GET /v1/metrics`` carries the
+Fetcher's metrics plus a ``response.<status>`` counter per answered status.
 
 Serving via CLI: ``python -m chronon_spark serve --conf <module> --upload-root
 <root> --batch-end-ds <ds> --port 0`` prints one JSON line
@@ -33,14 +39,13 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.api import JoinPart
-from chronon_spark.online import Fetcher, StaleUploadError
-
-_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+from chronon_spark.online import Context, Fetcher, StaleUploadError
+from chronon_spark.operators.local_merge import check_served, epoch_ms, ms_timestamp
 
 
 class UnknownEntityError(LookupError):
@@ -49,11 +54,14 @@ class UnknownEntityError(LookupError):
 
 def json_safe(v):
     """Row values -> JSON-encodable (timestamps to epoch millis, Decimal to
-    float, bytes base64, nested rows/maps/arrays recursively)."""
+    float, bytes base64, numpy scalars to Python numbers, nested
+    rows/maps/arrays recursively)."""
     if isinstance(v, _dt.datetime):
-        # integer arithmetic (float seconds * 1000 can land 1 ms low); a
-        # naive datetime is local time, as PySpark collects TIMESTAMP values
-        return (v.astimezone(_dt.timezone.utc) - _EPOCH) // _dt.timedelta(milliseconds=1)
+        return epoch_ms(v)
+    if isinstance(v, np.generic):
+        return json_safe(v.item())
+    if isinstance(v, np.ndarray):
+        return [json_safe(x) for x in v.tolist()]
     if isinstance(v, _dt.date):
         return v.isoformat()
     if isinstance(v, decimal.Decimal):
@@ -72,7 +80,9 @@ def json_safe(v):
 class FeatureService:
     """Request-batch front-end over a Fetcher: JSON key maps in, feature
     maps out. Holds the join/GroupBy registry and each part's post-batch
-    stream frame (the lambda's online leg — empty frames are fine)."""
+    stream frame (the lambda's online leg — empty frames are fine). Raises
+    ``local_merge.UnservedOpError`` when a configured join or GroupBy uses an
+    op the in-process merge does not serve."""
 
     def __init__(
         self,
@@ -86,6 +96,11 @@ class FeatureService:
         tiebreak: str | None = None,
         now_ms=None,
     ):
+        for j in (joins or {}).values():
+            for p in j.join_parts:
+                check_served(p.group_by)
+        for gb in (group_bys or {}).values():
+            check_served(gb)
         self.spark = spark
         self.fetcher = fetcher
         self.batch_end_ds = batch_end_ds
@@ -97,8 +112,9 @@ class FeatureService:
         import time as _time
 
         self._now_ms = now_ms or (lambda: int(_time.time() * 1000))
-        # Spark driver calls are serialized: correctness first (concurrent
-        # fetches would interleave persist/unpersist on the shared IR cache)
+        # one request at a time: a merge is milliseconds of Python under the
+        # GIL, so serializing costs little, and concurrent requests cannot
+        # load the same cold store (Spark jobs) twice
         self._lock = threading.Lock()
 
     # -- request frame construction -------------------------------------
@@ -123,20 +139,19 @@ class FeatureService:
                     )
         return {lk: t for lk, (t, _part) in seen.items()}
 
-    def _requests_df(self, rows: list[dict], key_types: dict, time_column: str) -> DataFrame:
+    def _requests_df(self, rows: list[dict], key_types: dict, time_column: str) -> list[dict]:
+        """Typed request rows: keys cast to their uploaded types (JSON
+        numbers arrive untyped), ``ts`` (epoch millis, default now) as a
+        UTC timestamp, like the offline engine's time columns."""
         if not isinstance(rows, list) or not rows or not all(isinstance(r, dict) for r in rows):
             raise ValueError("request body must be a non-empty JSON array of key objects")
         missing = [k for k in key_types if any(k not in r for r in rows)]
         if missing:
             raise ValueError(f"every request object must carry key fields {sorted(key_types)}")
         now = self._now_ms()
-        schema = T.StructType(
-            [T.StructField(k, t) for k, t in key_types.items()]
-            + [T.StructField("__ts_ms", T.LongType())]
-        )
-        data = []
+        typed = []
         for r in rows:
-            vals = []
+            row = {}
             for k, t in key_types.items():
                 v = r[k]
                 if v is not None and isinstance(t, (T.LongType, T.IntegerType, T.ShortType)):
@@ -145,13 +160,10 @@ class FeatureService:
                     v = float(v)
                 elif v is not None and isinstance(t, T.StringType):
                     v = str(v)
-                vals.append(v)
-            vals.append(int(r.get("ts", now)))
-            data.append(tuple(vals))
-        df = self.spark.createDataFrame(data, schema)
-        # serving ts rides as a real timestamp so outputs match the offline
-        # engine's column types (parquet sources read TIMESTAMP here)
-        return df.withColumn(time_column, F.timestamp_millis(F.col("__ts_ms"))).drop("__ts_ms")
+                row[k] = v
+            row[time_column] = ms_timestamp(int(r.get("ts", now)))
+            typed.append(row)
+        return typed
 
     # -- fetch paths -----------------------------------------------------
 
@@ -181,8 +193,7 @@ class FeatureService:
                 external_registry=self.external_registry,
                 tiebreak=self.tiebreak,
             )
-            collected = out.collect()
-        return self._render(collected, key_types, join.time_column)
+        return self._render(out, key_types, join.time_column)
 
     def fetch_group_by_rows(self, name: str, rows: list[dict]) -> list[dict]:
         if name not in self.group_bys:
@@ -195,15 +206,15 @@ class FeatureService:
             key_types = self._key_types([JoinPart(group_by=gb)])
             req = self._requests_df(rows, key_types, gb.time_column)
             out = self.fetcher.fetch_features(
-                req, self.streams[gb.name], gb, self.batch_end_ds, tiebreak=self.tiebreak
+                req, self.streams[gb.name], gb, self.batch_end_ds,
+                left_time_column=gb.time_column, tiebreak=self.tiebreak,
             )
-            collected = out.collect()
-        return self._render(collected, key_types, gb.time_column)
+        return self._render(out, key_types, gb.time_column)
 
-    def _render(self, collected, key_types: dict, time_column: str) -> list[dict]:
+    def _render(self, rows: list[dict], key_types: dict, time_column: str) -> list[dict]:
         results = []
-        for row in collected:
-            d = row.asDict(recursive=False)
+        for row in rows:
+            d = dict(row)
             entity = {k: json_safe(d.pop(k)) for k in key_types}
             entity["ts"] = json_safe(d.pop(time_column))
             results.append(
@@ -227,6 +238,7 @@ class FeatureService:
                 pass
 
             def _send(self, code: int, payload: dict):
+                svc.fetcher.metrics.increment(Context("service"), f"response.{code}")
                 body = json.dumps(payload).encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")

@@ -520,6 +520,14 @@ def insert_overwrite_partitions(df: DataFrame, table: PartitionedTable) -> None:
     table.insert_overwrite(write_layout(df, [table.ds_col]))
 
 
+def observed_rows(obs, name: str) -> int:
+    """The count metric ``name`` of an Observation whose observed frame was
+    just written. When AQE proves the written rows empty mid-query it drops
+    the observed node from the write plan, and the observation completes
+    with an empty row instead of a zero count."""
+    return obs.get[name] if obs._jo.getRow().length() else 0
+
+
 def backfill(
     spark: SparkSession,
     table: PartitionedTable,
@@ -559,10 +567,7 @@ def backfill(
         obs = Observation(f"backfill_{lo}_{hi}")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
         insert_overwrite_partitions(out, table)
-        # when AQE proves the chunk empty mid-query it drops the observed
-        # node from the write plan, and the observation completes with an
-        # empty row instead of a zero count
-        rows = obs.get["rows"] if obs._jo.getRow().length() else 0
+        rows = observed_rows(obs, "rows")
         # the chunk is materialized: release estimator-internal cached frames
         # (tile tables, query frames) so a long chunked backfill does not
         # accumulate dead cache blocks across chunks

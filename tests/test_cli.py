@@ -1109,3 +1109,49 @@ def test_cli_compact_table(spark, tmp_path, capsys):
         post[tuple(e["partition"].items())] = post.get(tuple(e["partition"].items()), 0) + 1
     assert all(c == 1 for c in post.values()), post
     assert sorted(map(repr, t.scan(spark).collect())) == before
+
+
+def test_cli_log_flattener_all_rows_dropped(spark, tmp_path, capsys):
+    """A flatten whose rows are all filtered out writes nothing and reports
+    0 flattened rows: the observed count of an empty write is 0, not an
+    error."""
+    conf = tmp_path / "flat_none_conf.py"
+    conf.write_text(FLAT_CONF.replace('join_name = "cli_j"', 'join_name = "no_such_join"'))
+    rc, res = _run(
+        spark,
+        ["log-flattener", "--conf", str(conf), "--out-root", str(tmp_path / "fout")],
+        capsys,
+    )
+    assert rc == 0
+    assert res["flattened_rows"] == 0 and res["raw_rows"] == 3
+
+
+def test_cli_fetch_with_no_requests_reports_zero_rows(spark, tmp_path, capsys):
+    """A fetch whose request frame is empty reports 0 rows instead of
+    failing on the empty write's observation."""
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    batch_end = (
+        ev.select(F.date_format("ts", "yyyy-MM-dd").alias("d")).distinct().orderBy("d").first()["d"]
+    )
+    conf = tmp_path / "fetch_none_conf.py"
+    conf.write_text(
+        FETCH_CONF.replace("__BATCH_END__", batch_end).replace("__SERVE__", "1999-01-01")
+    )
+    rc, _res = _run(
+        spark,
+        [
+            "group-by-upload", "--conf", str(conf),
+            "--out-root", str(tmp_path / "ups"), "--batch-end-ds", batch_end,
+        ],
+        capsys,
+    )
+    assert rc == 0
+    rc, res = _run(
+        spark,
+        [
+            "fetch", "--conf", str(conf), "--upload-root", str(tmp_path / "ups"),
+            "--out-root", str(tmp_path / "fout"), "--batch-end-ds", batch_end,
+        ],
+        capsys,
+    )
+    assert rc == 0 and res["rows"] == 0

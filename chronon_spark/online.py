@@ -1,22 +1,19 @@
-"""Online-serving support layer: caches + metrics + a caching Fetcher.
+"""Online-serving support layer: an LRU cache, metrics and a caching Fetcher.
 
 The reference keeps a serving-side support stack the offline engine never
-touches: a function-backed TTL cache with a fast post-exception refresh
-interval (online/src/main/scala/ai/chronon/online/TTLCache.scala:29-95), a
-named bounded LRU cache (LRUCache.scala:19-40), a batch-IR cache keyed
-(dataset, keys, batchEndTsMillis) that spares the KV store repeated decode
-work (FetcherCache.scala:26-113), and tagged counters/gauges/distributions
-(Metrics.scala Context). This module is the Spark-first analog: the "KV
-rows" here are the uploaded IR tables (group-by-upload's collapsed + tail
-tables), so the batch-IR cache holds verified, persisted DataFrames keyed by
-(GroupBy name, semantic hash, batch_end_ds) — one read + one lineage check
-per definition per batch day, however many fetch calls a long-lived serving
-session makes. Under the same key the Fetcher collects those tables (and
-each stream frame) once into an in-memory, key-indexed store
-(``operators/local_merge.py``) and answers every fetch by merging it in
-Python, the way the reference fetcher merges KV rows in-process: a fetch
-runs no Spark job. Caches are in-process (one serving JVM/driver),
-deliberately: cross-process sharing is the KV store's job, not the cache's.
+touches: a named bounded LRU cache (LRUCache.scala:19-40), a batch-IR cache
+keyed (dataset, keys, batchEndTsMillis) that spares the KV store repeated
+decode work (FetcherCache.scala:26-113), and tagged counters/gauges/
+distributions (Metrics.scala Context). This module is the Spark-first
+analog: the "KV rows" here are the uploaded IR tables (group-by-upload's
+collapsed + tail tables). The Fetcher reads and verifies them once per
+(GroupBy name, semantic hash, batch_end_ds), collects them into an
+in-memory, key-indexed store (``operators/local_merge.IRStore``) and keeps
+that store in one bounded LRU; the store is the only serving cache. Every
+fetch merges a request's keys against it in Python, the way the reference
+fetcher merges KV rows in-process: a fetch runs no Spark job once the store
+is loaded. Caches are in-process (one serving JVM/driver), deliberately:
+cross-process sharing is the KV store's job, not the cache's.
 """
 
 from __future__ import annotations
@@ -42,7 +39,7 @@ from chronon_spark.operators.upload import DAY_MS, StaleUploadError, read_upload
 
 
 # ---------------------------------------------------------------------------
-# generic caches
+# bounded LRU cache
 # ---------------------------------------------------------------------------
 
 
@@ -61,7 +58,6 @@ class LRUCache:
         self.hits = 0
         self.misses = 0
         self.evictions = 0
-        self._on_evict = None
 
     def get(self, key):
         with self._lock:
@@ -77,10 +73,8 @@ class LRUCache:
             self._d[key] = value
             self._d.move_to_end(key)
             while len(self._d) > self.maximum_size:
-                _k, old = self._d.popitem(last=False)
+                self._d.popitem(last=False)
                 self.evictions += 1
-                if self._on_evict is not None:
-                    self._on_evict(_k, old)
 
     def get_or_load(self, key, loader):
         hit = self.get(key)
@@ -93,68 +87,6 @@ class LRUCache:
     def __len__(self) -> int:
         with self._lock:
             return len(self._d)
-
-
-@dataclass
-class _TTLEntry:
-    value: object
-    updated_ms: int
-    is_error: bool = False
-
-
-class TTLCache:
-    """Function-backed cache with per-entry TTL and a SHORT refresh interval
-    for post-failure retries (reference TTLCache.scala:29-95: ``apply`` uses
-    the long TTL; a load that raised is retried after refresh_interval_ms
-    instead of being pinned for the full TTL; ``refresh`` forces the short
-    interval). ``now`` is injectable so tests control the clock."""
-
-    def __init__(
-        self,
-        fn,
-        ttl_ms: int = 2 * 60 * 60 * 1000,
-        refresh_interval_ms: int = 8 * 1000,
-        now=None,
-    ):
-        self._fn = fn
-        self.ttl_ms = ttl_ms
-        self.refresh_interval_ms = refresh_interval_ms
-        self._now = now or (lambda: int(time.time() * 1000))
-        self._d: dict = {}
-        self._lock = threading.Lock()
-        self.loads = 0
-
-    def _get(self, key, interval_ms: int):
-        with self._lock:
-            e = self._d.get(key)
-            now = self._now()
-            # a cached FAILURE expires on the short interval regardless of
-            # which read path hits it — the reference's "refresh after an
-            # exception" behavior without requiring callers to know
-            if e is not None and e.is_error:
-                interval_ms = min(interval_ms, self.refresh_interval_ms)
-            if e is not None and now - e.updated_ms < interval_ms:
-                if e.is_error:
-                    raise e.value
-                return e.value
-            self.loads += 1
-            try:
-                value = self._fn(key)
-            except Exception as exc:
-                self._d[key] = _TTLEntry(exc, now, is_error=True)
-                raise
-            self._d[key] = _TTLEntry(value, now)
-            return value
-
-    def __call__(self, key):
-        return self._get(key, self.ttl_ms)
-
-    def refresh(self, key):
-        return self._get(key, self.refresh_interval_ms)
-
-    def invalidate(self, key) -> None:
-        with self._lock:
-            self._d.pop(key, None)
 
 
 # ---------------------------------------------------------------------------
@@ -247,57 +179,48 @@ class Metrics:
 # caching fetcher
 # ---------------------------------------------------------------------------
 
+#: IR stores a Fetcher keeps, one per (GroupBy definition, batch day)
+MAX_STORES = 128
+
+
+def left_key_types(parts) -> dict[str, T.DataType]:
+    """Left-key column -> type, read off each part's IR store (the uploaded
+    collapsed IRs are the serving-side source of truth for key types; JSON
+    numbers arrive untyped). ``parts``: (left keys, IRStore) pairs. Parts
+    that disagree on a left key's type are a serving misconfiguration: a
+    ``TypeError`` naming both."""
+    seen: dict[str, tuple[T.DataType, str]] = {}
+    for lks, store in parts:
+        gb = store.gb
+        for lk, rk in zip(lks, gb.keys):
+            t = store.key_types[rk]
+            first_type, first_part = seen.setdefault(lk, (t, gb.name))
+            if first_type != t:
+                raise TypeError(
+                    f"left key '{lk}' is {first_type.simpleString()} in join part "
+                    f"'{first_part}' but {t.simpleString()} in join part '{gb.name}'"
+                )
+    return {lk: t for lk, (t, _part) in seen.items()}
+
 
 class Fetcher:
     """Serving-session fetch front-end (reference Fetcher + FetcherCache).
-    Each GroupBy's upload tables (contract: ``operators/upload.py``) are
-    read, verified and persisted once per (definition, batch day) — the
-    batch-IR cache — and collected under the same key into an in-memory
-    ``local_merge.IRStore``. ``fetch_features``/``fetch_join`` merge a
-    request's keys against that store in-process, so a fetch runs no Spark
-    job once the store is loaded; ``operators.upload.fetch_join`` stays the
-    distributed (``fetch`` CLI) form. Metrics record requests, cache
-    hits/misses, staleness rejections, store loads (``fetch.load_ms``) and
+    ``store`` reads and verifies a GroupBy's upload tables (contract:
+    ``operators/upload.py``) once per (definition, batch day) and collects
+    them into a ``local_merge.IRStore``, the one serving cache: an LRU of
+    at most ``MAX_STORES`` stores. ``fetch_features``/``fetch_join`` merge a
+    request's keys against the stores in-process, so a fetch runs no Spark
+    job once its stores and stream events are loaded (``load``);
+    ``operators.upload.fetch_join`` stays the distributed (``fetch`` CLI)
+    form. Metrics record requests, store hits/misses (``cache.hit``/
+    ``cache.miss``), staleness rejections, loads (``fetch.load_ms``) and
     merges (``fetch.merge_ms``)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        upload_root: str,
-        batch_ir_cache_size: int = 128,
-        metrics: Metrics | None = None,
-    ):
+    def __init__(self, spark: SparkSession, upload_root: str, metrics: Metrics | None = None):
         self.spark = spark
         self.upload_root = upload_root
         self.metrics = metrics or Metrics()
-        self._ir_cache = LRUCache("batch_ir", batch_ir_cache_size)
-        self._stores: dict = {}
-        self._ir_cache._on_evict = self._evict
-
-    def _evict(self, key, frames) -> None:
-        # evicted frames release their executor memory immediately instead
-        # of waiting for GC of the python wrapper
-        for f in frames:
-            f.unpersist()
-        self._stores.pop(key, None)
-
-    def _load_batch_frames(self, gb, batch_end_ds: str) -> tuple[DataFrame, DataFrame]:
-        try:
-            frames = read_upload_tables(self.spark, self.upload_root, gb, batch_end_ds)
-        except StaleUploadError:
-            ctx = Context("group_by.fetching", group_by=gb.name)
-            self.metrics.increment(ctx, "fetch.stale_upload")
-            raise
-        return tuple(f.persist() for f in frames)
-
-    def batch_frames(self, gb, batch_end_ds: str) -> tuple[DataFrame, DataFrame]:
-        key = (gb.name, gb.semantic_hash(), batch_end_ds)
-        ctx = Context("group_by.fetching", group_by=gb.name)
-        frames, was_hit = self._ir_cache.get_or_load(
-            key, lambda: self._load_batch_frames(gb, batch_end_ds)
-        )
-        self.metrics.increment(ctx, "cache.hit" if was_hit else "cache.miss")
-        return frames
+        self._cache = LRUCache("ir_store", MAX_STORES)
 
     def _timed_load(self, gb, load):
         t0 = time.perf_counter()
@@ -306,16 +229,28 @@ class Fetcher:
         self.metrics.distribution(ctx, "fetch.load_ms", (time.perf_counter() - t0) * 1000)
         return out
 
-    def store(self, gb, batch_end_ds: str) -> IRStore:
-        """``gb``'s key-indexed IR store, built from ``batch_frames`` once per
-        (definition, batch day) and dropped when those frames are evicted."""
-        frames = self.batch_frames(gb, batch_end_ds)
-        key = (gb.name, gb.semantic_hash(), batch_end_ds)
-        if key not in self._stores:
-            self._stores[key] = self._timed_load(gb, lambda: IRStore(gb, batch_end_ds, frames))
-        return self._stores[key]
+    def _read_store(self, gb, batch_end_ds: str) -> IRStore:
+        try:
+            frames = read_upload_tables(self.spark, self.upload_root, gb, batch_end_ds)
+        except StaleUploadError:
+            ctx = Context("group_by.fetching", group_by=gb.name)
+            self.metrics.increment(ctx, "fetch.stale_upload")
+            raise
+        return self._timed_load(gb, lambda: IRStore(gb, batch_end_ds, frames))
 
-    def _load(self, gb, batch_end_ds, stream, tiebreak, horizon_ms) -> tuple[IRStore, StreamEvents]:
+    def store(self, gb, batch_end_ds: str) -> IRStore:
+        """``gb``'s key-indexed IR store at ``batch_end_ds``, read, verified
+        and collected on its first call; a stale or unlineaged upload raises
+        ``StaleUploadError`` and is not cached."""
+        key = (gb.name, gb.semantic_hash(), batch_end_ds)
+        store, was_hit = self._cache.get_or_load(key, lambda: self._read_store(gb, batch_end_ds))
+        ctx = Context("group_by.fetching", group_by=gb.name)
+        self.metrics.increment(ctx, "cache.hit" if was_hit else "cache.miss")
+        return store
+
+    def load(self, gb, batch_end_ds, stream, tiebreak, horizon_ms) -> tuple[IRStore, StreamEvents]:
+        """``gb``'s store and ``stream``'s events cut to its horizon, each
+        loaded on first use."""
         store = self.store(gb, batch_end_ds)
         key = (id(stream), tiebreak, horizon_ms)
         if key not in store.streams:
@@ -333,12 +268,10 @@ class Fetcher:
     def _request_schema(self, rows, parts, tc: str) -> T.StructType:
         """Types of service request rows (keys typed like the uploaded IRs,
         the time column a timestamp) for the typed frames derivations and
-        external parts run over."""
+        external parts run over; ``parts`` as in ``left_key_types``."""
         fields = {tc: T.StructField(tc, T.TimestampType())}
-        for lks, store in parts:
-            collapsed = store.frames[0].schema
-            for lk, rk in zip(lks, store.gb.keys):
-                fields.setdefault(lk, T.StructField(lk, collapsed[rk].dataType))
+        for lk, t in left_key_types(parts).items():
+            fields[lk] = T.StructField(lk, t)
         return T.StructType([fields[c] for c in (rows[0] if rows else fields)])
 
     @staticmethod
@@ -367,7 +300,7 @@ class Fetcher:
         self.metrics.increment(ctx, "fetch.requests")
         try:
             rows, schema = _collect(requests)
-            store, events = self._load(gb, batch_end_ds, stream, tiebreak, horizon_ms)
+            store, events = self.load(gb, batch_end_ds, stream, tiebreak, horizon_ms)
             t0 = time.perf_counter()
             keys, tc = gb.keys, left_time_column
             names = store.names(horizon_ms)
@@ -415,7 +348,7 @@ class Fetcher:
         try:
             rows, schema = _collect(requests)
             parts = [
-                (p, *self._load(p.group_by, batch_end_ds, streams[p.group_by.name], tiebreak, horizon_ms))
+                (p, *self.load(p.group_by, batch_end_ds, streams[p.group_by.name], tiebreak, horizon_ms))
                 for p in join.join_parts
             ]
             t0 = time.perf_counter()

@@ -142,7 +142,8 @@ class IRStore:
     """A GroupBy's verified upload tables held in memory, key-indexed:
     per key the collapsed IR row, the tail tiles sorted by (``__res_ms``,
     ``__tile_ms``), and (per stream frame) the stream events sorted by
-    (event ms, tiebreak)."""
+    (event ms, tiebreak). ``frames`` stay unpersisted: after the collect
+    only analysis (``key_types``, ``feature_fields``) reads them."""
 
     def __init__(self, gb: GroupBy, batch_end_ds: str, frames: tuple[DataFrame, DataFrame]):
         """``frames``: the verified (collapsed, tail) upload frames, each
@@ -152,6 +153,7 @@ class IRStore:
         self.batch_end_ds = batch_end_ds
         self.batch_end = _batch_end_ms(batch_end_ds)
         self.frames = frames
+        self.key_types = {k: frames[0].schema[k].dataType for k in gb.keys}
         # (id(stream frame), tiebreak, horizon) -> (frame, StreamEvents); the
         # frame is kept so its id stays unique
         self.streams: dict = {}

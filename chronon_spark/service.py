@@ -7,14 +7,15 @@ JSON array of entity-key maps, responding GetFeaturesResponse — per-request
 ``{"status": "Success"|"Failure", "entityKeys": {...}, "features": {...}}``
 — plus GET /ping). Here the serving process is a long-lived SparkSession
 whose Fetcher holds each GroupBy's verified upload tables and stream events
-in an in-memory, key-indexed store (``operators/local_merge.py``),
-loaded by Spark jobs once per (definition, batch day). Each HTTP batch
-becomes typed Python request rows, and the lambda merge (collapsed IRs +
-tail tiles + stream) runs in-process over the store: a served request runs
-no Spark job. The ops served this way are ``local_merge.SERVED_OPS``; a
-configured join or GroupBy with any other op stops the service at
-construction, and one added later answers 500 naming the op (the ``fetch``
-CLI serves every op).
+in an in-memory, key-indexed store (``operators/local_merge.py``), loaded
+by Spark jobs at construction for every configured join part and GroupBy
+(one added later loads on its first request). Each HTTP batch becomes
+typed Python request rows, and the lambda merge (collapsed IRs + tail
+tiles + stream) runs in-process over the store: a served request runs no
+Spark job. The ops served this way are ``local_merge.SERVED_OPS``; a
+configured join or GroupBy with any other op, or with a stale upload,
+stops the service at construction; one added later answers 500 naming
+the op (the ``fetch`` CLI serves every op) or 503 for the stale upload.
 
 Status mapping: ``UnknownEntityError`` (join/GroupBy) -> 404, bad body -> 400,
 ``StaleUploadError`` (uploaded IRs don't match the serving definition, or
@@ -44,8 +45,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from chronon_spark.api import JoinPart
-from chronon_spark.online import Context, Fetcher, StaleUploadError
+from chronon_spark.online import Context, Fetcher, StaleUploadError, left_key_types
 from chronon_spark.operators.local_merge import check_served, epoch_ms, ms_timestamp
+from chronon_spark.operators.upload import DAY_MS
 
 
 class UnknownEntityError(LookupError):
@@ -80,9 +82,12 @@ def json_safe(v):
 class FeatureService:
     """Request-batch front-end over a Fetcher: JSON key maps in, feature
     maps out. Holds the join/GroupBy registry and each part's post-batch
-    stream frame (the lambda's online leg — empty frames are fine). Raises
-    ``local_merge.UnservedOpError`` when a configured join or GroupBy uses an
-    op the in-process merge does not serve."""
+    stream frame (the lambda's online leg — empty frames are fine), and
+    loads every configured part's IR store and stream events at
+    construction. Raises ``local_merge.UnservedOpError`` when a configured
+    join or GroupBy uses an op the in-process merge does not serve,
+    ``StaleUploadError`` when its upload is stale or unlineaged, and
+    ``RuntimeError`` when it has no stream frame."""
 
     def __init__(
         self,
@@ -96,10 +101,9 @@ class FeatureService:
         tiebreak: str | None = None,
         now_ms=None,
     ):
-        for j in (joins or {}).values():
-            for p in j.join_parts:
-                check_served(p.group_by)
-        for gb in (group_bys or {}).values():
+        gbs = [p.group_by for j in (joins or {}).values() for p in j.join_parts]
+        gbs += (group_bys or {}).values()
+        for gb in gbs:
             check_served(gb)
         self.spark = spark
         self.fetcher = fetcher
@@ -112,32 +116,23 @@ class FeatureService:
         import time as _time
 
         self._now_ms = now_ms or (lambda: int(_time.time() * 1000))
+        # the loads a request would make, made now: no request waits on one
+        self._check_streams(gbs)
+        for gb in gbs:
+            fetcher.load(gb, batch_end_ds, self.streams[gb.name], tiebreak, DAY_MS)
         # one request at a time: a merge is milliseconds of Python under the
-        # GIL, so serializing costs little, and concurrent requests cannot
-        # load the same cold store (Spark jobs) twice
+        # GIL, so serializing costs little, and an entry added after
+        # construction cannot load its store (Spark jobs) twice
         self._lock = threading.Lock()
 
     # -- request frame construction -------------------------------------
 
     def _key_types(self, parts) -> dict[str, T.DataType]:
-        """Left-key column -> type, read off the verified collapsed IR
-        frames (the uploaded tables are the serving-side source of truth
-        for key types; JSON numbers arrive untyped). Parts that disagree on
-        a left key's type are a serving misconfiguration (HTTP 500)."""
-        seen: dict[str, tuple[T.DataType, str]] = {}
-        for part in parts:
-            gb = part.group_by
-            collapsed, _tail = self.fetcher.batch_frames(gb, self.batch_end_ds)
-            types = {f.name: f.dataType for f in collapsed.schema.fields}
-            for lk, rk in zip(part.left_keys(), gb.keys):
-                first_type, first_part = seen.setdefault(lk, (types[rk], gb.name))
-                if first_type != types[rk]:
-                    raise TypeError(
-                        f"left key '{lk}' is {first_type.simpleString()} in join part "
-                        f"'{first_part}' but {types[rk].simpleString()} in join part "
-                        f"'{gb.name}'"
-                    )
-        return {lk: t for lk, (t, _part) in seen.items()}
+        """Left-key column -> type, read off the parts' IR stores
+        (``online.left_key_types``; a conflict is HTTP 500)."""
+        return left_key_types(
+            [(p.left_keys(), self.fetcher.store(p.group_by, self.batch_end_ds)) for p in parts]
+        )
 
     def _requests_df(self, rows: list[dict], key_types: dict, time_column: str) -> list[dict]:
         """Typed request rows: keys cast to their uploaded types (JSON

@@ -1,9 +1,9 @@
-"""Online-serving support layer: TTL/LRU caches, tagged metrics, and the
-batch-IR-caching Fetcher (reference TTLCache.scala, LRUCache.scala,
-FetcherCache.scala, Metrics.scala). The behavioral bar: a second fetch of
-the same (definition, batch day) must NOT re-read or re-verify the upload
-tables, values stay identical to the uncached path, and a stale definition
-is rejected before any lambda merge."""
+"""Online-serving support layer: the LRU cache, tagged metrics, and the
+Fetcher's IR-store cache (reference LRUCache.scala, FetcherCache.scala,
+Metrics.scala). The behavioral bar: a second fetch of the same
+(definition, batch day) must NOT re-read or re-verify the upload tables,
+values stay identical to the uncached path, and a stale definition is
+rejected before any lambda merge."""
 
 from __future__ import annotations
 
@@ -11,13 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.api import Aggregation, GroupBy, Op, TimeUnit, Window
+from chronon_spark import online
 from chronon_spark.online import (
     Context,
     Fetcher,
     LRUCache,
     Metrics,
     StaleUploadError,
-    TTLCache,
 )
 
 W7D = Window(7, TimeUnit.DAYS)
@@ -29,52 +29,13 @@ W1D = Window(1, TimeUnit.DAYS)
 # ---------------------------------------------------------------------------
 
 
-def test_ttl_cache_expiry_and_error_refresh():
-    clock = [1_000_000]
-    calls = []
-
-    def load(key):
-        calls.append(key)
-        if key == "boom" and len([c for c in calls if c == "boom"]) == 1:
-            raise RuntimeError("transient")
-        return f"v{len(calls)}"
-
-    c = TTLCache(load, ttl_ms=10_000, refresh_interval_ms=1_000, now=lambda: clock[0])
-    assert c("a") == "v1" and c("a") == "v1"  # cached within TTL
-    clock[0] += 9_999
-    assert c("a") == "v1"
-    clock[0] += 2
-    assert c("a") == "v2"  # TTL elapsed -> reload
-    # a load that RAISED is retried on the short refresh interval, not
-    # pinned for the full TTL (TTLCache.scala's post-exception refresh)
-    with pytest.raises(RuntimeError):
-        c("boom")
-    with pytest.raises(RuntimeError):
-        c("boom")  # still inside refresh interval: cached failure re-raised
-    assert calls.count("boom") == 1
-    clock[0] += 1_001
-    assert c("boom").startswith("v")  # retried and healed
-    # refresh() forces the short interval on healthy entries too
-    clock[0] += 2_000
-    before = c.loads
-    assert c("a") == c("a")
-    assert c.loads == before  # within TTL: no reload
-    c.refresh("a")
-    assert c.loads == before + 1  # past refresh interval: reloaded
-    c.invalidate("a")
-    c("a")
-    assert c.loads == before + 2
-
-
 def test_lru_cache_eviction_and_stats():
-    evicted = []
     c = LRUCache("t", maximum_size=2)
-    c._on_evict = lambda k, v: evicted.append(k)
     c.put("a", 1)
     c.put("b", 2)
     assert c.get("a") == 1  # refreshes 'a'
     c.put("c", 3)  # evicts 'b' (LRU), not 'a'
-    assert evicted == ["b"]
+    assert len(c) == 2
     assert c.get("b") is None and c.get("a") == 1 and c.get("c") == 3
     assert (c.hits, c.misses, c.evictions) == (3, 1, 1)
     v, hit = c.get_or_load("d", lambda: 4)
@@ -142,19 +103,32 @@ def upload_env(spark, events, tmp_path_factory):
     return root, gb, batch_end_ds, stream, requests
 
 
-def test_fetcher_caches_verified_batch_irs(spark, events, upload_env):
+def _count_reads(monkeypatch) -> list:
+    """Patch the Fetcher's upload-table reader to log each GroupBy it reads."""
+    reads = []
+    real = online.read_upload_tables
+
+    def read(spark, root, gb, batch_end_ds):
+        reads.append(gb.name)
+        return real(spark, root, gb, batch_end_ds)
+
+    monkeypatch.setattr(online, "read_upload_tables", read)
+    return reads
+
+
+def test_fetcher_caches_verified_batch_irs(spark, events, upload_env, monkeypatch):
     root, gb, batch_end_ds, stream, requests = upload_env
     f = Fetcher(spark, root)
     ctx = Context("group_by.fetching", group_by=gb.name)
+    reads = _count_reads(monkeypatch)
 
     out1 = f.fetch_features(requests, stream, gb, batch_end_ds, tiebreak="event_id")
     assert f.metrics.counter(ctx, "cache.miss") == 1
     out2 = f.fetch_features(requests, stream, gb, batch_end_ds, tiebreak="event_id")
     assert f.metrics.counter(ctx, "cache.hit") == 1
     assert f.metrics.counter(ctx, "fetch.requests") == 2
-    # cached frames are the same persisted objects (no table re-read)
-    k = (gb.name, gb.semantic_hash(), batch_end_ds)
-    assert f._ir_cache.get(k)[0].storageLevel.useMemory
+    # the second fetch answers from the cached store: no table re-read
+    assert reads == [gb.name]
 
     # values: cached == uncached == offline engine over the unified log
     from chronon_spark.operators.groupby import temporal_events
@@ -192,30 +166,37 @@ def test_fetcher_rejects_stale_definition(spark, upload_env):
     assert out.count() == requests.count()
 
 
-def test_batch_frames_rejects_selection_groupby(spark, upload_env):
+def test_store_rejects_selection_groupby(spark, upload_env):
     """A selection GroupBy (no aggregations) has no upload tables: the
     reader says so instead of reporting a missing upload lineage."""
     root, _gb, batch_end_ds, *_ = upload_env
     sel = GroupBy(name="users", keys=["user_id"], aggregations=None)
     with pytest.raises(ValueError, match="selection part 'users'"):
-        Fetcher(spark, root).batch_frames(sel, batch_end_ds)
+        Fetcher(spark, root).store(sel, batch_end_ds)
 
 
-def test_fetcher_eviction_unpersists(spark, upload_env):
-    root, gb, batch_end_ds, stream, requests = upload_env
-    f = Fetcher(spark, root, batch_ir_cache_size=1)
-    c1, _t1 = f.batch_frames(gb, batch_end_ds)
-    assert c1.storageLevel.useMemory
-    # second definition evicts the first (cache size 1) and unpersists it
-    gb2 = GroupBy(
-        name=gb.name, keys=gb.keys,
-        aggregations=[Aggregation(Op.COUNT, "value", windows=(W7D,)),
-                      Aggregation(Op.SUM, "value", windows=(W1D,))],
-        accuracy=gb.accuracy,
+def test_fetcher_evicts_least_recent_store(spark, events, upload_env, monkeypatch):
+    """The Fetcher keeps at most ``MAX_STORES`` IR stores: a store past the
+    bound evicts the least recently used one, which then reloads."""
+    from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
+
+    root, gb, batch_end_ds, *_ = upload_env
+    other = GroupBy(
+        name="cache_gb_other", keys=gb.keys,
+        aggregations=[Aggregation(Op.COUNT, "value", windows=(W1D,))],
     )
-    # same definition content -> same semantic hash -> same key: still a hit
-    _c, _t = f.batch_frames(gb2, batch_end_ds)
-    assert f._ir_cache.hits >= 1
+    batch = events.where(F.date_format("ts", "yyyy-MM-dd") <= batch_end_ds)
+    write_upload_tables(spark, root, other, batch_end_ds, upload_batch_irs(batch, other, batch_end_ds))
+    monkeypatch.setattr(online, "MAX_STORES", 1)
+    f = Fetcher(spark, root)
+    reads = _count_reads(monkeypatch)
+    first = f.store(gb, batch_end_ds)
+    assert f.store(gb, batch_end_ds) is first  # a hit: no re-read
+    f.store(other, batch_end_ds)  # evicts gb's store
+    assert f.store(gb, batch_end_ds) is not first
+    assert reads == [gb.name, other.name, gb.name]
+    ctx = Context("group_by.fetching", group_by=gb.name)
+    assert (f.metrics.counter(ctx, "cache.hit"), f.metrics.counter(ctx, "cache.miss")) == (1, 2)
 
 
 def test_fetch_join_merges_external_parts(spark, upload_env):
@@ -264,3 +245,32 @@ def test_fetch_join_merges_external_parts(spark, upload_env):
     for r in merged.select("user_id", "ext_risk_score").collect():
         want = r["user_id"] * 0.5 if r["user_id"] % 2 == 0 else None
         assert r["ext_risk_score"] == want
+
+
+def test_fetch_join_rejects_conflicting_left_key_types(spark, events, upload_env):
+    """Two join parts whose uploads type ``user_id`` differently: the typed
+    request rows a join derivation runs over raise ``TypeError`` naming
+    both parts instead of taking the first part's type."""
+    import datetime as dt
+
+    from chronon_spark.api import Join, JoinPart
+    from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
+
+    root, gb, batch_end_ds, stream, _requests = upload_env
+    by_str = GroupBy(
+        name="cache_gb_str", keys=["user_id"],
+        aggregations=[Aggregation(Op.COUNT, "value", windows=(W1D,))],
+    )
+    as_str = F.col("user_id").cast("string").alias("user_id")
+    batch = events.where(F.date_format("ts", "yyyy-MM-dd") <= batch_end_ds)
+    batch = batch.select(as_str, *[c for c in batch.columns if c != "user_id"])
+    write_upload_tables(spark, root, by_str, batch_end_ds, upload_batch_irs(batch, by_str, batch_end_ds))
+    join = Join(
+        name="j_conflict", left_keys=["user_id"],
+        join_parts=[JoinPart(group_by=gb), JoinPart(group_by=by_str)],
+        derivations={"*": "*", "n": "cache_gb_str_value_count_1d + 1"},
+    )
+    streams = {gb.name: stream, by_str.name: stream.select(as_str, *[c for c in stream.columns if c != "user_id"])}
+    rows = [{"user_id": 1, "ts": dt.datetime(2030, 1, 1, tzinfo=dt.timezone.utc)}]
+    with pytest.raises(TypeError, match="'user_id' is bigint in join part 'cache_gb' but string in join part 'cache_gb_str'"):
+        Fetcher(spark, root).fetch_join(rows, streams, join, batch_end_ds)

@@ -14,9 +14,11 @@ import sys
 import threading
 import urllib.error
 import urllib.request
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from chronon_spark.api import Aggregation, GroupBy, Join, JoinPart, Op, TimeUnit, Window
 from chronon_spark.online import Fetcher
@@ -207,14 +209,14 @@ def test_conflicting_left_key_types_name_both_parts(spark, served, monkeypatch):
         name="svc_gb_str", keys=["user_id"],
         aggregations=[Aggregation(Op.COUNT, "value", windows=(W1D,))],
     )
-    real = fetcher.batch_frames
+    real = fetcher.store
 
-    def frames(gb, ds):
+    def store(gb, ds):
         if gb.name == other.name:
-            return spark.createDataFrame([], "user_id string"), None
+            return SimpleNamespace(gb=other, key_types={"user_id": StringType()})
         return real(gb, ds)
 
-    monkeypatch.setattr(fetcher, "batch_frames", frames)
+    monkeypatch.setattr(fetcher, "store", store)
     monkeypatch.setitem(svc.streams, other.name, stream)
     monkeypatch.setitem(svc.joins, "conflict", Join(
         name="conflict", left_keys=["user_id"],

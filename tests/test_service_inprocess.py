@@ -1,8 +1,9 @@
-"""The HTTP service answers from the Fetcher's in-memory IR store:
-once a join's store is loaded, a served request runs no Spark job; ops the
-in-process merge does not serve stop the service at construction (or answer
-500 naming the op when added later); /v1/metrics counts responses per
-status and times each merge; numpy values render as JSON."""
+"""The HTTP service answers from the Fetcher's in-memory IR store, loaded
+at construction, so a served request (the first one too) runs no Spark
+job; ops the in-process merge does not serve, and stale uploads, stop the
+service at construction (an op added later answers 500 naming it);
+/v1/metrics counts responses per status and times each merge; numpy values
+render as JSON."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.api import Aggregation, GroupBy, Join, JoinPart, Op, TimeUnit, Window
-from chronon_spark.online import Fetcher
+from chronon_spark.online import Fetcher, StaleUploadError
 from chronon_spark.operators.local_merge import UnservedOpError
 from chronon_spark.service import FeatureService, json_safe
 
@@ -96,26 +97,36 @@ def _in_job_group(spark, fn, group):
 
 
 def test_served_requests_run_no_spark_job(spark, env, monkeypatch):
+    """The service loads its stores at construction, so even the first
+    requests run no Spark job."""
     svc, server, base = _serve(spark, env)
     rows = env[3]
     tracker = spark.sparkContext.statusTracker()
     try:
-        for kind, name in (("fetch_join_rows", "warm"), ("fetch_group_by_rows", "warm")):
-            monkeypatch.setattr(svc, kind, _in_job_group(spark, getattr(FeatureService, kind).__get__(svc), name))
-        _post(f"{base}/v1/features/join/{JOIN.name}", rows)
-        _post(f"{base}/v1/features/groupby/{GB.name}", rows)
-        # the cold requests load the stores with Spark jobs the group sees
-        assert tracker.getJobIdsForGroup("warm")
-        for kind in ("fetch_join_rows", "fetch_group_by_rows"):
-            monkeypatch.setattr(svc, kind, _in_job_group(spark, getattr(FeatureService, kind).__get__(svc), "served"))
-        code_j, body_j = _post(f"{base}/v1/features/join/{JOIN.name}", rows)
-        code_g, body_g = _post(f"{base}/v1/features/groupby/{GB.name}", rows)
-        assert code_j == code_g == 200
-        assert len(body_j["results"]) == len(body_g["results"]) == len(rows)
-        assert tracker.getJobIdsForGroup("served") == []
+        for group in ("first", "served"):
+            for kind in ("fetch_join_rows", "fetch_group_by_rows"):
+                monkeypatch.setattr(svc, kind, _in_job_group(spark, getattr(FeatureService, kind).__get__(svc), group))
+            code_j, body_j = _post(f"{base}/v1/features/join/{JOIN.name}", rows)
+            code_g, body_g = _post(f"{base}/v1/features/groupby/{GB.name}", rows)
+            assert code_j == code_g == 200
+            assert len(body_j["results"]) == len(body_g["results"]) == len(rows)
+            assert tracker.getJobIdsForGroup(group) == []
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_stale_upload_stops_service_construction(spark, env):
+    root, batch_end_ds, stream, _rows = env
+    edited = GroupBy(
+        name=GB.name, keys=GB.keys, aggregations=[Aggregation(Op.COUNT, "value", windows=(W1D,))]
+    )
+    stale = Join(name="stale_join", left_keys=["user_id"], join_parts=[JoinPart(group_by=edited)])
+    with pytest.raises(StaleUploadError, match="re-run group-by-upload"):
+        FeatureService(
+            spark, Fetcher(spark, root), batch_end_ds,
+            joins={stale.name: stale}, streams={GB.name: stream},
+        )
 
 
 def test_unserved_op_stops_service_construction(spark, env):

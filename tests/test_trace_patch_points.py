@@ -127,8 +127,9 @@ def test_join_patch_points_see_every_part_and_table(spark, tmp_path, monkeypatch
 def test_service_patch_points_see_one_join_request(spark, tmp_path, monkeypatch):
     """One in-process ``fetch_join_rows`` reaches each wrapped service
     method exactly once, the first three while holding the request lock
-    (the tracer's ``service.lock_wait`` span wraps that lock)."""
-    from chronon_spark.online import Fetcher
+    (the tracer's ``service.lock_wait`` span wraps that lock), and records
+    only ``cache.hit``s."""
+    from chronon_spark.online import Context, Fetcher
     from chronon_spark.operators.upload import upload_batch_irs, write_upload_tables
     from chronon_spark.service import FeatureService
 
@@ -166,6 +167,10 @@ def test_service_patch_points_see_one_join_request(spark, tmp_path, monkeypatch)
         joins={JOIN.name: JOIN}, streams={GB.name: _events(spark, [2])},
     )
     svc._lock = Lock()
+    # the counters the benchmark's online.ir_cache_hit_ratio reads: the
+    # store loads (one miss) at construction, requests only hit it
+    counter = functools.partial(svc.fetcher.metrics.counter, Context("group_by.fetching", group_by=GB.name))
+    assert (counter("cache.miss"), counter("cache.hit")) == (1, 0)
     rows = svc.fetch_join_rows(JOIN.name, [{"k": "a", "ts": T0 + 2 * DAY_MS + 7_200_000}])
     assert list(rows[0]["features"]) == ["g_v_count_1d"]
     assert calls == {
@@ -174,3 +179,7 @@ def test_service_patch_points_see_one_join_request(spark, tmp_path, monkeypatch)
         "fetch_join@locked": 1,
         "_render@free": 1,
     }
+    hits = counter("cache.hit")
+    assert counter("cache.miss") == 1 and hits > 0
+    svc.fetch_join_rows(JOIN.name, [{"k": "b", "ts": T0 + 2 * DAY_MS}])
+    assert counter("cache.miss") == 1 and counter("cache.hit") == 2 * hits

@@ -2429,7 +2429,7 @@ def q_asof_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggregations=[
             Aggregation(Op.COUNT, "value", windows=(W7D, W1D)),
             Aggregation(Op.SUM, "value", windows=(W7D,)),
-            # decayed ops are not sliding-capable: under strategy='sliding'
+            # decayed ops are not sliding-capable: under strategy='auto'
             # the mid tier routes these hop-mergeable aligned ops through the
             # hop-CASCADE pass, so this leg re-verifies the cascade path (the
             # router's true exact fallback — unaligned halflife — is covered
@@ -2437,7 +2437,7 @@ def q_asof_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             *DECAYED_AGGS,
         ],
     )
-    out = G.temporal_events(_purchase_left(ev), ev, gb, tiebreak="event_id", strategy="sliding")
+    out = G.temporal_events(_purchase_left(ev), ev, gb, tiebreak="event_id", strategy="auto")
     return out.select(
         "user_id",
         to_millis(F.col("ts")).alias("ts_ms"),
@@ -2569,7 +2569,7 @@ def q_mg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     out = G.temporal_events(
-        _purchase_left(ev), ev, gb, tiebreak="event_id", strategy="sliding"
+        _purchase_left(ev), ev, gb, tiebreak="event_id", strategy="auto"
     )
     return out.select(
         "user_id",
@@ -2839,7 +2839,7 @@ def q_asof_estimators(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge against DuckDB's kurtosis_pop / sample-converted skewness."""
     parts = [
         _asof_estimator_leg(spark, sf_dir, s).withColumn("estimator", F.lit(lbl))
-        for s, lbl in (("exact", "exact"), ("hops", "hops"), ("sliding", "sliding"))
+        for s, lbl in (("exact", "exact"), ("hops", "hops"), ("auto", "sliding"))
     ]
     out = parts[0]
     for p in parts[1:]:

@@ -18,6 +18,9 @@ planner (operators/groupby.py), not here.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -446,8 +449,8 @@ def singleton_cols(
     agg: Aggregation, value: Column, ts: Column, tiebreak: Column | None, slot: str
 ) -> dict[str, Column]:
     """Per-ROW (non-aggregate) IR columns: the IR a single event contributes,
-    shaped exactly like ``partial_cols`` output so ``window_merge_cols`` can
-    merge raw rows and tile rows with the same expressions. This is the
+    shaped exactly like ``partial_cols`` output so ``merge_cols`` can merge
+    raw rows and tile rows with the same expressions. This is the
     'prepare' of the reference IR contract (BaseAggregator.scala:21-43) as a
     scalar projection — it lets the HEAD band run as one incremental window
     pass over the raw frame instead of a join + groupBy."""
@@ -482,73 +485,161 @@ def singleton_cols(
     raise ValueError(f"{op} has no singleton IR form")
 
 
+def merge_cols(
+    agg: Aggregation,
+    slot: str,
+    *,
+    mask: Column | None = None,
+    weight: Column | None = None,
+    over=None,
+    bands: list[str] | None = None,
+) -> dict[str, Column]:
+    """Merged IR columns of one op, named like its ``partial_cols`` output
+    (``{slot}__{field}``): the 'merge' half of the reference IR contract,
+    the one place its per-op rules live. Three forms:
 
-def partial_merge_cols(agg: Aggregation, slot: str) -> dict[str, Column]:
-    """Partial -> partial merge: build a coarser tile's IR columns from finer
-    tiles' IR columns (same names in, same names out). This is the 'merge'
-    half of the reference IR contract and lets 1d tiles be built from 1h
-    tiles from 5min tiles — one shuffle per resolution over shrinking data."""
+    - by default, aggregates over rows of ``{slot}__*`` IR columns (tile
+      coarsening, the cascade's masked merge, the upload collapse and fetch).
+      ``mask`` drops rows; ``weight`` multiplies every IR value (the
+      TIME_DECAYED per-tile weight);
+    - with ``over`` (a window spec), the same aggregates as window functions
+      (the sliding TAIL, MID and HEAD bands);
+    - with ``bands`` (column prefixes), a row-wise combine of one row's
+      ``{band}__*`` columns into the slot's names (the sliding bands; sketch
+      IRs have no row-wise form). A sum field is NULL only when every band
+      is NULL, as the aggregate form gives.
+    """
     op = agg.operation
     k = agg.k or 1
+    # five reducers over one IR field, in the aggregate (or window) form or
+    # the row-wise form; the per-op rules below are written once over them
+    if bands is None:
 
-    def c(suffix: str) -> Column:
-        return F.col(f"{slot}__{suffix}")
+        def reducer(fn):
+            def red(f: str) -> Column:
+                c = F.col(f"{slot}__{f}")
+                c = c if mask is None else F.when(mask, c)
+                c = c if weight is None else c * weight
+                return fn(c) if over is None else fn(c).over(over)
+
+            return red
+
+        fns = (F.sum, F.min, F.max, F.collect_list, F.hll_union_agg)
+    else:
+
+        def reducer(fn):
+            return lambda f: fn([F.col(f"{b}__{f}") for b in bands])
+
+        def row_sum(cs: list[Column]) -> Column:
+            nz = [F.coalesce(c, F.lit(0)) for c in cs]
+            return F.when(F.coalesce(*cs).isNotNull(), reduce(operator.add, nz))
+
+        def no_sketch(cs: list[Column]) -> Column:
+            raise ValueError(f"{op} sketches have no row-wise merge")
+
+        fns = (
+            row_sum,
+            lambda cs: F.least(*cs) if len(cs) > 1 else cs[0],
+            lambda cs: F.greatest(*cs) if len(cs) > 1 else cs[0],
+            lambda cs: F.array_compact(F.array(*cs)),
+            no_sketch,
+        )
+    total, lo, hi, items, hll = map(reducer, fns)
 
     if op in (Op.COUNT, Op.TIME_DECAYED_COUNT):
-        return {f"{slot}__n": F.sum(c("n"))}
-    if op in (Op.SUM, Op.TIME_DECAYED_SUM):
-        return {f"{slot}__s": F.sum(c("s"))}
-    if op == Op.AVERAGE:
-        return {f"{slot}__s": F.sum(c("s")), f"{slot}__n": F.sum(c("n"))}
-    if op == Op.VARIANCE:
-        return {
-            f"{slot}__n": F.sum(c("n")),
-            f"{slot}__s": F.sum(c("s")),
-            f"{slot}__q": F.sum(c("q")),
-        }
-    if op in (Op.SKEW, Op.KURTOSIS):
-        return {f"{slot}__mn": chan_moment_fold(F.collect_list(c("mn")))}
-    if op == Op.MIN:
-        return {f"{slot}__m": F.min(c("m"))}
-    if op == Op.MAX:
-        return {f"{slot}__m": F.max(c("m"))}
-    if op == Op.FIRST:
-        p = c("p")
-        return {f"{slot}__p": F.min_by(p, p["o"])}
-    if op == Op.LAST:
-        p = c("p")
-        return {f"{slot}__p": F.max_by(p, p["o"])}
-    if op in (Op.FIRST_K, Op.LAST_K):
-        flat = F.array_sort(F.flatten(F.collect_list(c("l"))))
-        if op == Op.LAST_K:
-            flat = F.reverse(flat)
-        return {f"{slot}__l": F.slice(flat, 1, k)}
-    if op in (Op.TOP_K, Op.BOTTOM_K):
-        flat = F.array_sort(F.flatten(F.collect_list(c("l"))))
-        if op == Op.TOP_K:
-            flat = F.reverse(flat)
-        return {f"{slot}__l": F.slice(flat, 1, k)}
-    if op == Op.UNIQUE_COUNT:
-        return {f"{slot}__set": F.array_distinct(F.flatten(F.collect_list(c("set"))))}
-    if op == Op.APPROX_UNIQUE_COUNT:
-        if agg.accuracy is not None:
-            # bottom-k of a union-distinct == bottom-k of the concatenated
-            # bottom-k's deduped — still a KMV sample of the union
-            return {
-                f"{slot}__kdh": F.slice(
-                    F.array_sort(F.array_distinct(F.flatten(F.collect_list(c("kdh"))))),
-                    1,
-                    kmv_cap(agg),
-                )
-            }
-        return {f"{slot}__hll": F.hll_union_agg(c("hll"))}
-    if op == Op.APPROX_PERCENTILE:
+        fields = {"n": total("n")}
+    elif op in (Op.SUM, Op.TIME_DECAYED_SUM):
+        fields = {"s": total("s")}
+    elif op == Op.AVERAGE:
+        fields = {"s": total("s"), "n": total("n")}
+    elif op == Op.VARIANCE:
+        fields = {f: total(f) for f in ("n", "s", "q")}
+    elif op in (Op.SKEW, Op.KURTOSIS):
+        fields = {"mn": chan_moment_fold(items("mn"))}
+    elif op == Op.MIN:
+        fields = {"m": lo("m")}
+    elif op == Op.MAX:
+        fields = {"m": hi("m")}
+    # FIRST/LAST IRs are (order key, value) structs: the struct min/max is
+    # the earliest/latest event (ties on the order key fall to the value)
+    elif op == Op.FIRST:
+        fields = {"p": lo("p")}
+    elif op == Op.LAST:
+        fields = {"p": hi("p")}
+    elif op in (Op.FIRST_K, Op.LAST_K, Op.TOP_K, Op.BOTTOM_K):
+        srt = F.array_sort(F.flatten(items("l")))
+        if op in (Op.LAST_K, Op.TOP_K):
+            srt = F.reverse(srt)
+        fields = {"l": F.slice(srt, 1, k)}
+    elif op == Op.UNIQUE_COUNT:
+        fields = {"set": F.array_distinct(F.flatten(items("set")))}
+    elif op == Op.APPROX_UNIQUE_COUNT and agg.accuracy is not None:
+        # bottom-k of a union-distinct == bottom-k of the concatenated
+        # bottom-k's deduped — still a KMV sample of the union
+        flat = F.array_distinct(F.flatten(items("kdh")))
+        fields = {"kdh": F.slice(F.array_sort(flat), 1, kmv_cap(agg))}
+    elif op == Op.APPROX_UNIQUE_COUNT:
+        fields = {"hll": hll("hll")}
+    elif op == Op.APPROX_PERCENTILE:
         # KMV merge = union then keep the k smallest hashes: still a uniform
         # sample of the union (the bottom-k of a union is the bottom-k of
         # the concatenated bottom-k's)
-        return {
-            f"{slot}__kmv": F.slice(
-                F.array_sort(F.flatten(F.collect_list(c("kmv")))), 1, kmv_cap(agg)
-            )
-        }
+        fields = {"kmv": F.slice(F.array_sort(F.flatten(items("kmv"))), 1, kmv_cap(agg))}
+    else:
+        raise ValueError(f"{op} has no mergeable partial form")
+    return {f"{slot}__{f}": c for f, c in fields.items()}
+
+
+def finalize(agg: Aggregation, slot: str, merged: dict[str, Column]) -> Column:
+    """Merged IR columns (``merge_cols`` output for ``slot``) -> the
+    user-facing value: the 'finalize' half of the reference IR contract.
+    Every zero-event result matches ``direct_agg``'s (COUNT 0, *_K empty,
+    the rest NULL)."""
+    op = agg.operation
+
+    def c(f: str) -> Column:
+        return merged[f"{slot}__{f}"]
+
+    if op == Op.COUNT:
+        return F.coalesce(c("n"), F.lit(0))
+    if op == Op.SUM:
+        return c("s")
+    if op == Op.TIME_DECAYED_COUNT:
+        return decayed_finalize(agg, c("n"))
+    if op == Op.TIME_DECAYED_SUM:
+        return decayed_finalize(agg, c("s"))
+    if op == Op.AVERAGE:
+        n = c("n")
+        return F.when(n > 0, c("s") / n)
+    if op == Op.VARIANCE:
+        n, s = c("n"), c("s")
+        return F.when(n > 0, c("q") / n - (s / n) * (s / n))
+    if op in (Op.SKEW, Op.KURTOSIS):
+        return moment_finalize(op, c("mn"))
+    if op in (Op.MIN, Op.MAX):
+        return c("m")
+    if op in (Op.FIRST, Op.LAST):
+        return c("p")["v"]
+    if op in (Op.FIRST_K, Op.LAST_K):
+        return F.transform(c("l"), lambda s: s["v"])
+    if op in (Op.TOP_K, Op.BOTTOM_K):
+        return c("l")
+    if op == Op.UNIQUE_COUNT:
+        return F.size(c("set")).cast("long")
+    if op == Op.APPROX_UNIQUE_COUNT:
+        if agg.accuracy is not None:
+            return kmv_distinct_estimate(c("kdh"), kmv_cap(agg))
+        return F.hll_sketch_estimate(c("hll"))
+    if op == Op.APPROX_PERCENTILE:
+        # the discrete quantile of the sampled values: rank ceil(p*n),
+        # matching percentile_approx's smallest-value-at-rank semantics — at
+        # a lossless cap (accuracy >= group size) this IS the exact discrete
+        # quantile
+        vals = F.array_sort(F.transform(c("kmv"), lambda s: s["v"]))
+        n = F.size(vals)
+        ranks = [
+            F.greatest(F.lit(1), F.ceil(F.lit(float(p)) * n)).cast("int")
+            for p in agg.percentiles or (0.5,)
+        ]
+        return F.when(n > 0, F.array(*[F.element_at(vals, r) for r in ranks]))
     raise ValueError(f"{op} has no mergeable partial form")

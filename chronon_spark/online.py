@@ -55,6 +55,7 @@ class LRUCache:
         self.maximum_size = maximum_size
         self._d: OrderedDict = OrderedDict()
         self._lock = threading.Lock()
+        self._load_lock = threading.Lock()
         self.hits = 0
         self.misses = 0
         self.evictions = 0
@@ -77,12 +78,21 @@ class LRUCache:
                 self.evictions += 1
 
     def get_or_load(self, key, loader):
+        """(value, hit). Single-flight: the load lock is held across the
+        miss check and the load, so threads that miss the same key run
+        ``loader`` once and share its value. Hits never take the load lock;
+        loads (start-up, entries added later) run one at a time."""
         hit = self.get(key)
         if hit is not None:
             return hit, True
-        value = loader()
-        self.put(key, value)
-        return value, False
+        with self._load_lock:
+            with self._lock:
+                value = self._d.get(key)
+            if value is not None:
+                return value, True
+            value = loader()
+            self.put(key, value)
+            return value, False
 
     def __len__(self) -> int:
         with self._lock:

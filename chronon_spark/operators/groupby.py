@@ -6,26 +6,30 @@ L143-168, snapshotEntities L99-141) as declarative DataFrame plans:
 
 - ``temporal_events``: for each left row (keys, ts), aggregate events with
   ``sawtooth_tail(ts, w) <= ev.ts < ts`` (strict head, zero leakage).
-  Two strategies:
-    * ``exact``  — range join queries x events, one conditional aggregate per
-      (op, window). Fan-out is bounded by events-per-key-per-max-window; best
-      when keys are not hot.
-    * ``hops``   — pre-aggregate events into hop tiles
-      (groupBy(key, floor(ts/hop))) — the Spark-native equivalent of the
-      reference's HopsAggregator (aggregator/.../windowing/HopsAggregator.
-      scala:33-165) — then range-join *tiles* to queries and merge partial
-      IRs. Fan-out is bounded by window/hop (<= 168) regardless of key
-      hotness: this is the 100TB-scale path for skewed keys.
-    * ``sliding`` — the sliding-tile estimator (plans/sliding.py): densified
-      window passes + equi-joins only, no range join anywhere. Skew-proof at
-      any key hotness; the default scale path.
-  ``auto`` (the DEFAULT) routes each aggregation to the sliding estimator
-  when it qualifies (operation in SLIDING_OPS and every window a whole
-  multiple of its sawtooth tail hop) and to the exact estimator otherwise,
-  joining the feature frames on one shared shuffle key. Windows that are not
-  hop-aligned (possible only for minute-unit windows < 1 hop multiple, e.g.
-  Window(7, MINUTES)) silently lose one tail hop under the tile estimators,
-  so the router sends them to the exact path.
+  Three estimators:
+    * exact   — range join queries x events, one conditional aggregate per
+      (op, window). Fan-out is bounded by events-per-key-per-max-window;
+      best when keys are not hot.
+    * cascade — pre-aggregate events into 5min tiles, coarsen them to 1h and
+      1d (the Spark-native form of the reference's HopsAggregator,
+      aggregator/.../windowing/HopsAggregator.scala:33-165), range-join each
+      resolution's band of tiles to the queries and merge the partial IRs
+      (``ops.merge_cols`` / ``ops.finalize``).
+      Fan-out is bounded by the tile count per window regardless of key
+      hotness. Serves every op in ``HOP_MERGEABLE_OPS``.
+    * sliding — plans/sliding.py: densified window passes over tile tables
+      plus equi-joins, no range join anywhere. Skew-proof at any key
+      hotness; serves ``SLIDING_OPS``.
+  ``strategy`` picks the route. ``auto`` (the default) sends each
+  aggregation whose windows are whole multiples of their sawtooth tail hop
+  to the sliding estimator when its op is in ``SLIDING_OPS``, else to the
+  cascade when its op is in ``HOP_MERGEABLE_OPS`` (HLL/KMV sketches,
+  decayed and moment ops), else to the exact estimator; the feature frames
+  join on one shared shuffle key. ``hops`` sends every hop-aligned
+  ``HOP_MERGEABLE_OPS`` aggregation to the cascade, and ``exact`` sends
+  everything to the range join. Windows that are not hop-aligned (possible
+  only for minute-unit windows, e.g. Window(7, MINUTES)) would lose one
+  tail hop under the tile estimators, so every route sends them to exact.
 
 - ``snapshot_events``: per (key, ds) end-of-day aggregates over trailing
   windows `[eod - w, eod)` for every day in the requested range.
@@ -47,6 +51,13 @@ from pyspark.sql import functions as F
 from chronon_spark.api import Accuracy, Aggregation, GroupBy, Op, Window
 from chronon_spark.functions import ops as O
 from chronon_spark.plans import windows as W
+from chronon_spark.plans.sliding import (
+    SLIDING_OPS,
+    _presence_window,
+    bucketed_pass_sliding,
+    histogram_pass_sliding,
+    temporal_pass_sliding,
+)
 
 QTS = "__q_ts_ms"  # query-time long millis
 ETS = "__e_ts_ms"  # event-time long millis
@@ -340,7 +351,7 @@ def _temporal_pass_hops(
         r, finer = used[idx], used[idx + 1]
         merged: dict[str, Column] = {}
         for slot, a in slot_agg.items():
-            merged.update(O.partial_merge_cols(a, slot))
+            merged.update(O.merge_cols(a, slot))
         tiles_by_res[r] = (
             tiles_by_res[finer]
             .withColumn(TILE, W.round_down(F.col(TILE), r))
@@ -416,94 +427,17 @@ def _temporal_pass_hops(
             if lb is not None:
                 band = band & (F.col(TILE) >= lb)
             mask = mask | band
-        merge_exprs.append(_merge_with_masked_cols(a, slot, mask).alias(name))
+        weight = None
+        if a.operation in O.DECAYED_OPS:
+            # one weight per tile: TILE is the tile start (head rows carry
+            # TILE = floor(q, finest), same halflife bucket as q => age 0),
+            # and every resolution in play divides the halflife
+            # (_hop_aligned), so floor(tile_ts/H) equals floor(event_ts/H)
+            # for every event inside
+            weight = O.decayed_weight(a, F.col(QTS), F.col(TILE))
+        merged = O.merge_cols(a, slot, mask=mask, weight=weight)
+        merge_exprs.append(O.finalize(a, slot, merged).alias(name))
     return unioned.groupBy(*keys, QTS).agg(*merge_exprs)
-
-
-def _merge_with_masked_cols(a: Aggregation, slot: str, mask: Column) -> Column:
-    """Merge per-tile partial IR columns (ops.partial_cols shapes) and
-    finalize to the user-facing value, with every IR column masked."""
-    op = a.operation
-    k = a.k or 1
-
-    def c(suffix: str) -> Column:
-        return F.when(mask, F.col(f"{slot}__{suffix}"))
-
-    if op == Op.COUNT:
-        return F.coalesce(F.sum(c("n")), F.lit(0))
-    if op == Op.SUM:
-        return F.sum(c("s"))
-    if op in O.DECAYED_OPS:
-        # one weight per tile: TILE is the tile start (head rows carry
-        # TILE = floor(q, finest), same halflife bucket as q => age 0), and
-        # every resolution in play divides the halflife (_hop_aligned), so
-        # floor(tile_ts/H) equals floor(event_ts/H) for every event inside
-        w_t = O.decayed_weight(a, F.col(QTS), F.col(TILE))
-        src = c("n") if op == Op.TIME_DECAYED_COUNT else c("s")
-        return O.decayed_finalize(a, F.sum(src * w_t))
-    if op == Op.AVERAGE:
-        return F.sum(c("s")) / F.when(F.sum(c("n")) > 0, F.sum(c("n")))
-    if op == Op.VARIANCE:
-        n, s, q_ = F.sum(c("n")), F.sum(c("s")), F.sum(c("q"))
-        return F.when(n > 0, q_ / n - (s / n) * (s / n))
-    if op in (Op.SKEW, Op.KURTOSIS):
-        return O.moment_finalize(op, O.chan_moment_fold(F.collect_list(c("mn"))))
-    if op == Op.MIN:
-        return F.min(c("m"))
-    if op == Op.MAX:
-        return F.max(c("m"))
-    if op == Op.FIRST:
-        p = c("p")
-        return F.min_by(p, p["o"])["v"]
-    if op == Op.LAST:
-        p = c("p")
-        return F.max_by(p, p["o"])["v"]
-    if op in (Op.FIRST_K, Op.LAST_K):
-        flat = F.flatten(F.collect_list(c("l")))
-        srt = F.array_sort(flat)
-        if op == Op.LAST_K:
-            srt = F.reverse(srt)
-        return F.slice(F.transform(srt, lambda s: s["v"]), 1, k)
-    if op in (Op.TOP_K, Op.BOTTOM_K):
-        flat = F.array_sort(F.flatten(F.collect_list(c("l"))))
-        if op == Op.TOP_K:
-            flat = F.reverse(flat)
-        return F.slice(flat, 1, k)
-    if op == Op.UNIQUE_COUNT:
-        return F.size(F.array_distinct(F.flatten(F.collect_list(c("set"))))).cast("long")
-    if op == Op.APPROX_UNIQUE_COUNT:
-        if a.accuracy is not None:
-            cap = O.kmv_cap(a)
-            flat = F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list(c("kdh"))))),
-                1,
-                cap,
-            )
-            return O.kmv_distinct_estimate(flat, cap)
-        return F.hll_sketch_estimate(F.hll_union_agg(c("hll")))
-    if op == Op.APPROX_PERCENTILE:
-        # merge KMV samples (union, keep k smallest hashes), then the
-        # discrete quantile of the sampled values: rank ceil(p*n), matching
-        # percentile_approx's smallest-value-at-rank semantics — at a
-        # lossless cap (accuracy >= group size) this IS the exact discrete
-        # quantile
-        flat = F.slice(
-            F.array_sort(F.flatten(F.collect_list(c("kmv")))), 1, O.kmv_cap(a)
-        )
-        vals = F.array_sort(F.transform(flat, lambda s: s["v"]))
-        n = F.size(vals)
-        ps = list(a.percentiles or (0.5,))
-        q_ = F.array(
-            *[
-                F.element_at(
-                    vals,
-                    F.greatest(F.lit(1), F.ceil(F.lit(float(p)) * n)).cast("int"),
-                )
-                for p in ps
-            ]
-        )
-        return F.when(n > 0, q_)
-    raise ValueError(f"{op} not hop-mergeable")
 
 
 # ---------------------------------------------------------------------------
@@ -661,15 +595,13 @@ def _presence_window_aligned(gb: GroupBy):
     _presence_window) — False when it exists but is not hop-aligned (then
     the tiled map passes cannot replicate the exact presence bound and must
     fall back)."""
-    from chronon_spark.plans.sliding import _presence_window
-
     w_max = _presence_window(gb)
     if w_max is not None and w_max.millis % w_max.tail_hop_millis() != 0:
         return False
     return w_max
 
 
-STRATEGIES = ("auto", "sliding", "hops", "exact")
+STRATEGIES = ("auto", "hops", "exact")
 
 
 def temporal_events(
@@ -687,9 +619,10 @@ def temporal_events(
     fanned back out by an equi-join, preserving duplicate left rows
     (reference row-count preservation: JoinTest.scala:589-590).
 
-    ``strategy`` picks the estimator: ``auto`` (the default) and
-    ``sliding`` route window-function-mergeable ops to sliding tiles,
-    ``hops`` to hop tiles, ``exact`` everything to the range join.
+    ``strategy`` picks the estimator: ``auto`` (the default) routes
+    window-function-mergeable ops to sliding tiles and the other
+    hop-mergeable ops to the cascade, ``hops`` every hop-mergeable op to
+    the cascade, ``exact`` everything to the range join.
     """
     if strategy not in STRATEGIES:
         raise ValueError(
@@ -702,63 +635,37 @@ def temporal_events(
     left_n = left.withColumn(QTS, W.ts_to_millis(left, ltc))
     q = left_n.select(*gb.keys, QTS).distinct()
 
+    def _routed(aggs: list[Aggregation], ops) -> list[Aggregation]:
+        return [a for a in aggs if a.operation in ops and _hop_aligned(a)]
+
     direct, bucketed, mapops = _split_passes(gb)
+    fast = _routed(direct, SLIDING_OPS) if strategy == "auto" else []
+    rest = [a for a in direct if a not in fast]
+    # the cascade takes what sliding cannot merge as window functions
+    # (sketches, decayed and moment ops), or under "hops" every hop-mergeable
+    # op: bounded fan-out beats the exact range join on hot keys
+    mid = _routed(rest, O.HOP_MERGEABLE_OPS) if strategy != "exact" else []
+    rest = [a for a in rest if a not in mid]
     parts: list[DataFrame] = []
-    if direct:
-        if strategy in ("hops", "sliding", "auto"):
-            from chronon_spark.plans.sliding import SLIDING_OPS, temporal_pass_sliding
+    if mid:
+        parts.append(_temporal_pass_hops(q, ev, gb, mid, tiebreak))
+    if fast:
+        parts.append(temporal_pass_sliding(q, ev, gb, fast, tiebreak))
+    if rest:
+        parts.append(_temporal_pass_exact(q, ev, gb, rest, tiebreak))
 
-            if strategy == "hops":
-                fast_ops, fast_fn = O.HOP_MERGEABLE_OPS, _temporal_pass_hops
-            else:
-                fast_ops, fast_fn = SLIDING_OPS, temporal_pass_sliding
-            fast = [a for a in direct if a.operation in fast_ops and _hop_aligned(a)]
-            fast_ids = {id(a) for a in fast}
-            rest = [a for a in direct if id(a) not in fast_ids]
-            if strategy in ("sliding", "auto"):
-                # middle tier: hop-mergeable but not sliding-capable (HLL
-                # sketches — not window-function-mergeable) ride the cascade
-                # tile estimator: bounded fan-out beats the exact range join
-                # on hot keys
-                mid = [
-                    a
-                    for a in rest
-                    if a.operation in O.HOP_MERGEABLE_OPS and _hop_aligned(a)
-                ]
-                mid_ids = {id(a) for a in mid}
-                rest = [a for a in rest if id(a) not in mid_ids]
-                if mid:
-                    parts.append(_temporal_pass_hops(q, ev, gb, mid, tiebreak))
-            if fast:
-                parts.append(fast_fn(q, ev, gb, fast, tiebreak))
-            if rest:
-                parts.append(_temporal_pass_exact(q, ev, gb, rest, tiebreak))
-        else:
-            parts.append(_temporal_pass_exact(q, ev, gb, direct, tiebreak))
-    def _tiled_maps() -> bool:
-        if strategy not in ("sliding", "auto"):
-            return False
-        from chronon_spark.plans.sliding import SLIDING_OPS
-
-        w_aux = _presence_window_aligned(gb)
-        return w_aux is not False and all(
-            a.operation in SLIDING_OPS and _hop_aligned(a)
-            for aggs in bucketed.values()
-            for a in aggs
-        )
-
-    use_tiled_maps = (bucketed or mapops) and _tiled_maps()
+    use_tiled_maps = (
+        strategy == "auto"
+        and _presence_window_aligned(gb) is not False
+        and all(_routed(aggs, SLIDING_OPS) == aggs for aggs in bucketed.values())
+    )
     for bcol, aggs in bucketed.items():
         if use_tiled_maps:
-            from chronon_spark.plans.sliding import bucketed_pass_sliding
-
             parts.append(bucketed_pass_sliding(q, ev, gb, bcol, aggs, tiebreak))
         else:
             parts.append(_bucket_pass(q, ev, gb, bcol, aggs, tiebreak))
     for a in mapops:
         if use_tiled_maps and _hop_aligned(a):
-            from chronon_spark.plans.sliding import histogram_pass_sliding
-
             parts.append(histogram_pass_sliding(q, ev, gb, a, tiebreak))
         else:
             parts.append(_histogram_pass(q, ev, gb, a, tiebreak))

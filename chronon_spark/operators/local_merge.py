@@ -17,7 +17,7 @@ in Python under the same masks as ``fetch_features``:
   ``ts < q`` for a lifetime window).
 
 Slices come from ``np.searchsorted`` over time-sorted arrays, and each op
-merges and finalizes exactly as ``groupby._merge_with_masked_cols`` does
+merges and finalizes exactly as ``ops.merge_cols`` and ``ops.finalize`` do
 (plain sums, no prefix sums: differences of double prefix sums lose
 precision). ``SERVED_OPS`` lists the ops served this way; any other op
 raises ``UnservedOpError`` (the ``fetch`` CLI and ``upload.fetch_join`` serve
@@ -281,7 +281,7 @@ def _finalize(a, irs, vals: list, ords: list | None):
     non-null IR values of the collapsed row and in-band tiles) with its
     in-window stream events (non-null ``vals`` and, for ``_ORDERED`` ops,
     their (ms, tiebreak) order keys ``ords``), then finalize as
-    ``_merge_with_masked_cols``."""
+    ``ops.finalize``."""
     op = a.operation
     k = a.k or 1
     if op == Op.COUNT:

@@ -60,7 +60,6 @@ from chronon_spark.operators.groupby import (
     ETS,
     QTS,
     TILE,
-    _merge_with_masked_cols,
     _normalize_events,
     run_setups,
 )
@@ -277,7 +276,7 @@ def upload_batch_irs(
         ).agg(*[c.alias(n) for n, c in collapsed_exprs.items()])
         merge_exprs: dict = {}
         for i, (a, _w) in enumerate(pairs):
-            merge_exprs.update(O.partial_merge_cols(a, f"p{i}"))
+            merge_exprs.update(O.merge_cols(a, f"p{i}"))
         collapsed = daily.groupBy(*gb.keys).agg(
             *[c.alias(n) for n, c in merge_exprs.items()]
         )
@@ -643,9 +642,8 @@ def fetch_features(
 
     merge_exprs = []
     for i, (a, w) in enumerate(pairs):
-        merge_exprs.append(
-            _merge_with_masked_cols(a, f"p{i}", _include(w)).alias(a.output_name(w, None))
-        )
+        merged = O.merge_cols(a, f"p{i}", mask=_include(w))
+        merge_exprs.append(O.finalize(a, f"p{i}", merged).alias(a.output_name(w, None)))
     for name, a, w in mg_slots:
         # lambda merge for a histogram: entry-wise sum of the contributing
         # summaries (collapsed + in-band tail tiles + masked head), then the

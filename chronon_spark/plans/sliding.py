@@ -65,115 +65,6 @@ SLIDING_OPS = (
 
 
 # ---------------------------------------------------------------------------
-# IR algebra: window-frame merge and expression-level band combine+finalize
-# ---------------------------------------------------------------------------
-
-
-def window_merge_cols(agg: Aggregation, slot: str, wspec) -> dict[str, Column]:
-    """Merged partial IR columns over a window frame (same slot names)."""
-    op = agg.operation
-    k = agg.k or 1
-
-    def c(s: str) -> Column:
-        return F.col(f"{slot}__{s}")
-
-    if op == Op.COUNT:
-        return {f"{slot}__n": F.sum(c("n")).over(wspec)}
-    if op == Op.SUM:
-        return {f"{slot}__s": F.sum(c("s")).over(wspec)}
-    if op == Op.AVERAGE:
-        return {f"{slot}__s": F.sum(c("s")).over(wspec), f"{slot}__n": F.sum(c("n")).over(wspec)}
-    if op == Op.VARIANCE:
-        return {
-            f"{slot}__n": F.sum(c("n")).over(wspec),
-            f"{slot}__s": F.sum(c("s")).over(wspec),
-            f"{slot}__q": F.sum(c("q")).over(wspec),
-        }
-    if op == Op.MIN:
-        return {f"{slot}__m": F.min(c("m")).over(wspec)}
-    if op == Op.MAX:
-        return {f"{slot}__m": F.max(c("m")).over(wspec)}
-    if op == Op.FIRST:
-        return {f"{slot}__p": F.min(c("p")).over(wspec)}
-    if op == Op.LAST:
-        return {f"{slot}__p": F.max(c("p")).over(wspec)}
-    if op in (Op.FIRST_K, Op.LAST_K, Op.TOP_K, Op.BOTTOM_K):
-        flat = F.flatten(F.collect_list(c("l")).over(wspec))
-        srt = F.array_sort(flat)
-        if op in (Op.LAST_K, Op.TOP_K):
-            srt = F.reverse(srt)
-        return {f"{slot}__l": F.slice(srt, 1, k)}
-    if op == Op.UNIQUE_COUNT:
-        return {f"{slot}__set": F.array_distinct(F.flatten(F.collect_list(c("set")).over(wspec)))}
-    raise ValueError(f"{op} not supported by the sliding estimator")
-
-
-def _nz(col: Column) -> Column:
-    return F.coalesce(col, F.lit(0))
-
-
-def _sum_cols(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
-def combine_and_finalize(agg: Aggregation, prefixes: list[str]) -> Column:
-    """Expression-level merge of band IR columns ({prefix}__{slotcol}) and
-    finalization to the user-facing value."""
-    op = agg.operation
-    k = agg.k or 1
-
-    def cs(s: str) -> list[Column]:
-        return [F.col(f"{p}__{s}") for p in prefixes]
-
-    if op == Op.COUNT:
-        return _sum_cols([_nz(c) for c in cs("n")])
-    if op == Op.SUM:
-        nonnull = None
-        for c in cs("s"):
-            nn = c.isNotNull()
-            nonnull = nn if nonnull is None else (nonnull | nn)
-        return F.when(nonnull, _sum_cols([_nz(c) for c in cs("s")]))
-    if op == Op.AVERAGE:
-        n = _sum_cols([_nz(c) for c in cs("n")])
-        s = _sum_cols([_nz(c) for c in cs("s")])
-        return F.when(n > 0, s / n)
-    if op == Op.VARIANCE:
-        n = _sum_cols([_nz(c) for c in cs("n")])
-        s = _sum_cols([_nz(c) for c in cs("s")])
-        sq = _sum_cols([_nz(c) for c in cs("q")])
-        return F.when(n > 0, sq / n - (s / n) * (s / n))
-    if op == Op.MIN:
-        return F.least(*cs("m")) if len(prefixes) > 1 else cs("m")[0]
-    if op == Op.MAX:
-        return F.greatest(*cs("m")) if len(prefixes) > 1 else cs("m")[0]
-    if op in (Op.FIRST, Op.LAST):
-        arr = F.array_sort(F.array_compact(F.array(*cs("p"))))
-        if op == Op.LAST:
-            arr = F.reverse(arr)
-        return F.when(F.size(arr) > 0, F.element_at(arr, 1)["v"])
-    if op in (Op.FIRST_K, Op.LAST_K):
-        # flatten(array_compact(array(bands))) sidesteps typed-empty-array
-        # coercion: null band arrays just disappear
-        flat = F.flatten(F.array_compact(F.array(*cs("l"))))
-        srt = F.array_sort(flat)
-        if op == Op.LAST_K:
-            srt = F.reverse(srt)
-        return F.transform(F.slice(srt, 1, k), lambda s: s["v"])
-    if op in (Op.TOP_K, Op.BOTTOM_K):
-        flat = F.array_sort(F.flatten(F.array_compact(F.array(*cs("l")))))
-        if op == Op.TOP_K:
-            flat = F.reverse(flat)
-        return F.slice(flat, 1, k)
-    if op == Op.UNIQUE_COUNT:
-        flat = F.flatten(F.array_compact(F.array(*cs("set"))))
-        return F.size(F.array_distinct(flat)).cast("long")
-    raise ValueError(f"{op} not supported by the sliding estimator")
-
-
-# ---------------------------------------------------------------------------
 # the estimator
 # ---------------------------------------------------------------------------
 
@@ -335,7 +226,7 @@ def temporal_pass_sliding(
         else:
             merged: dict[str, Column] = {}
             for a in aggs_unique:
-                merged.update(O.partial_merge_cols(a, slot_of[id(a)]))
+                merged.update(O.merge_cols(a, slot_of[id(a)]))
             tiles_h = (
                 t5.withColumn(TILE, W.round_down(F.col(TILE), hop))
                 .groupBy(*keys, TILE)
@@ -361,8 +252,7 @@ def temporal_pass_sliding(
             lo = -w.millis if w is not None else SW.unboundedPreceding
             wspec = SW.partitionBy(*keys).orderBy(F.col(TILE)).rangeBetween(lo, -1)
             prefix = f"t{hop}_{'w' + str(w.millis) if w is not None else 'life'}_{slot}"
-            wm = window_merge_cols(a, slot, wspec)
-            for name, col in wm.items():
+            for name, col in O.merge_cols(a, slot, over=wspec).items():
                 # name is "{slot}__{s}" -> rename to "{prefix}__{s}"
                 tail_sel.append(col.alias(prefix + name[len(slot):]))
             band_prefixes[(id(a), w.millis if w else -1)].append(prefix)
@@ -385,7 +275,7 @@ def temporal_pass_sliding(
             for a in {id(a): a for a, _ in hop_pairs}.values():
                 slot = slot_of[id(a)]
                 prefix = f"m{hop}_{slot}"
-                for name, col in window_merge_cols(a, slot, wspec5).items():
+                for name, col in O.merge_cols(a, slot, over=wspec5).items():
                     mid_sel.append(col.alias(prefix + name[len(slot):]))
             for a, w in hop_pairs:
                 band_prefixes[(id(a), w.millis if w else -1)].append(
@@ -419,7 +309,7 @@ def temporal_pass_sliding(
     head_sel: list[Column] = []
     for a in aggs_unique:
         slot = slot_of[id(a)]
-        for name, col in window_merge_cols(a, slot, whead).items():
+        for name, col in O.merge_cols(a, slot, over=whead).items():
             head_sel.append(col.alias("h_" + name))
     head = (
         head_base.select(*keys, ETS, F.col(PROBE), *head_sel)
@@ -433,8 +323,10 @@ def temporal_pass_sliding(
 
     final_cols = []
     for a, w in pairs:
-        prefixes = band_prefixes[(id(a), w.millis if w else -1)]
-        final_cols.append(combine_and_finalize(a, prefixes).alias(a.output_name(w, None)))
+        slot = slot_of[id(a)]
+        bands = band_prefixes[(id(a), w.millis if w else -1)]
+        merged = O.merge_cols(a, slot, bands=bands)
+        final_cols.append(O.finalize(a, slot, merged).alias(a.output_name(w, None)))
     return out.select(*gb.keys, QTS, *final_cols)
 
 

@@ -4,15 +4,14 @@ Mirrors the reference's session defaults (UTC timezone, dynamic partition
 overwrite, AQE; reference: spark/src/main/scala/ai/chronon/spark/
 SparkSessionBuilder.scala:65-76) but on stock PySpark.
 
-Table formats: this build targets HIVE-STYLE PARTITIONED PARQUET only
-(`ds=` directory partitions, dynamic partition overwrite — see
-sources/tableio.py). The reference additionally speaks Iceberg and Delta
-(TableUtils.scala:104-282); this environment ships no Iceberg/Delta jars,
-so rather than carry an untestable config branch, the factory accepts
-``extra_conf`` through which a deployment with jars on the classpath can
-attach any catalog (extensions, catalog impl, warehouse) without code
-changes — every writer in tableio keeps day-partition semantics that map
-1:1 onto an Iceberg identity-partitioned table.
+Table formats: the session needs no format jars. ``tableio.resolve_table``
+maps an output root to a day-partitioned table: a plain path is Hive-style
+partitioned parquet (``ds=`` directories, dynamic partition overwrite),
+``iceberg:`` and ``delta:`` roots go to the jar-free Iceberg v2 and Delta
+implementations in sources/iceberg.py and sources/delta.py (metadata
+written by this package, data files written by Spark), and ``catalog:``
+roots to a Spark-catalog table (sources/catalog.py). A deployment with
+catalog jars on the classpath attaches them through ``extra_conf``.
 """
 
 from __future__ import annotations

@@ -10,7 +10,7 @@ docs/source/Tiled_Architecture.md).
 Structured-Streaming re-expression: ``readStream -> groupBy(window(ts, hop),
 keys).agg(partial IRs) -> outputMode("update") -> foreachBatch(sink)``. The
 tile schema matches the batch hop-tile estimator
-(operators/groupby.partial_cols), so a fetcher can merge batch tiles + the
+(functions/ops.partial_cols), so a fetcher can merge batch tiles + the
 stream's fresh tiles exactly like the reference's lambda merge.
 """
 

@@ -49,7 +49,7 @@ def _gb(cap):
 
 def test_mg_large_cap_equals_exact(spark, events):
     left = _left(events)
-    capped = temporal_events(left, events, _gb(1000), tiebreak="event_id", strategy="sliding")
+    capped = temporal_events(left, events, _gb(1000), tiebreak="event_id", strategy="auto")
     exact = temporal_events(left, events, _gb(None), tiebreak="event_id", strategy="exact")
     assert _maps(capped) == _maps(exact)
 
@@ -79,7 +79,7 @@ def test_mg_small_cap_underestimates_within_bound(spark):
     events = _skewed_events(spark)
     left = events.select("user_id", "ts").distinct().limit(300)
     capped = _maps(
-        temporal_events(left, events, _gb(cap), tiebreak="event_id", strategy="sliding")
+        temporal_events(left, events, _gb(cap), tiebreak="event_id", strategy="auto")
     )
     # truth: full (uncapped, untruncated) histogram from the exact plan
     gb_full = GroupBy(

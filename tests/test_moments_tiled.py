@@ -7,7 +7,7 @@ straggler shape among scalar ops. (Raw power sums were tried first and
 rejected: a 2-event cluster at ~500 loses 8+ digits of excess kurtosis to
 cancellation; the Chan fold measures 7.5e-15 worst-case relative error vs
 the exact estimator at sf0.01.) Checked here with a 1e-9 relative
-tolerance; sliding strategy routes these ops through the cascade mid-tier
+tolerance; the auto strategy routes these ops through the cascade mid-tier
 (a Chan fold is not a window-frame sum)."""
 
 from __future__ import annotations
@@ -78,12 +78,12 @@ def test_tiled_moments_match_exact_everywhere(frames):
     ev, q = frames
     outs = {
         s: _by_key(G.temporal_events(q, ev, GB, tiebreak="event_id", strategy=s))
-        for s in ("exact", "hops", "sliding", "auto")
+        for s in ("exact", "hops", "auto")
     }
     cols = [c for c in next(iter(outs["exact"].values())) if c.startswith("v_")]
     assert len(outs["exact"]) > 0
     for key, base in outs["exact"].items():
-        for s in ("hops", "sliding", "auto"):
+        for s in ("hops", "auto"):
             got = outs[s][key]
             for col in cols:
                 assert _close(base[col], got[col]), (s, key, col, base[col], got[col])

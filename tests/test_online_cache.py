@@ -7,6 +7,9 @@ rejected before any lambda merge."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +47,31 @@ def test_lru_cache_eviction_and_stats():
     assert (v, hit) == (4, True)
     with pytest.raises(ValueError):
         LRUCache("bad", maximum_size=0)
+
+
+@pytest.mark.parametrize("n_threads", [2, 16])
+def test_lru_cache_get_or_load_is_single_flight(n_threads):
+    c = LRUCache("t")
+    calls = []
+
+    def loader():
+        calls.append(1)
+        time.sleep(0.2)
+        return object()
+
+    got = [None] * n_threads
+
+    def fetch(i):
+        got[i] = c.get_or_load("k", loader)[0]
+
+    threads = [threading.Thread(target=fetch, args=(i,)) for i in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+        assert not t.is_alive()
+    assert len(calls) == 1
+    assert got[0] is not None and all(g is got[0] for g in got)
 
 
 def test_metrics_tagged_counters_and_distributions():

@@ -3,7 +3,7 @@
 The hand-picked configs in test_temporal_groupby.py cover each operator
 once; this sweep samples random (op, window-set, k) combinations plus a
 random synthetic event distribution (bursty keys, duplicate timestamps,
-nulls) and asserts all three estimators (exact, hops, sliding) agree
+nulls) and asserts the exact, hops and auto (sliding + cascade) routes agree
 bit-for-bit. Seeds are FIXED so failures reproduce; the generator varies
 shape, not determinism.
 
@@ -148,7 +148,7 @@ def test_random_config_estimators_agree(spark, seed):
     )
     frames = {
         s: temporal_events(q, ev, gb, tiebreak="event_id", strategy=s)
-        for s in ("exact", "hops", "sliding")
+        for s in ("exact", "hops", "auto")
     }
     cols = sorted(frames["exact"].columns)
     kidx, tidx = cols.index("k"), cols.index("ts")
@@ -162,7 +162,7 @@ def test_random_config_estimators_agree(spark, seed):
         for s, df in frames.items()
     }
     _assert_rows_close(rows["hops"], rows["exact"], f"seed={seed}: hops vs exact")
-    _assert_rows_close(rows["sliding"], rows["exact"], f"seed={seed}: sliding vs exact")
+    _assert_rows_close(rows["auto"], rows["exact"], f"seed={seed}: auto vs exact")
     ev.unpersist()
 
 
@@ -186,7 +186,7 @@ def test_random_config_estimators_agree_negative_epoch(spark, seed):
     )
     frames = {
         s: temporal_events(q, ev, gb, tiebreak="event_id", strategy=s)
-        for s in ("exact", "hops", "sliding")
+        for s in ("exact", "hops", "auto")
     }
     cols = sorted(frames["exact"].columns)
     kidx, tidx = cols.index("k"), cols.index("ts")
@@ -198,7 +198,7 @@ def test_random_config_estimators_agree_negative_epoch(spark, seed):
         for s, df in frames.items()
     }
     _assert_rows_close(rows["hops"], rows["exact"], f"seed={seed} neg: hops vs exact")
-    _assert_rows_close(rows["sliding"], rows["exact"], f"seed={seed} neg: sliding vs exact")
+    _assert_rows_close(rows["auto"], rows["exact"], f"seed={seed} neg: auto vs exact")
     ev.unpersist()
 
 

@@ -95,7 +95,7 @@ def _norm(v):
     return v
 
 
-@pytest.mark.parametrize("strategy", ["hops", "sliding"])
+@pytest.mark.parametrize("strategy", ["hops", "auto"])
 def test_tiled_strategies_equal_exact(spark, events, gb, strategy):
     hop_aggs = [
         a
@@ -225,10 +225,10 @@ def test_approx_percentile_rides_cascade_lossless(spark, events):
     assert not calls, "percentile fell back to the exact range join under auto"
 
 
-@pytest.mark.parametrize("strategy", ["slidng", "hop", "", "AUTO"])
+@pytest.mark.parametrize("strategy", ["slidng", "hop", "", "AUTO", "sliding"])
 def test_unknown_strategy_raises(spark, events, gb, strategy):
-    """A misspelt strategy must fail loudly, not fall back to the exact
+    """A misspelt or retired strategy must fail loudly, not fall back to the exact
     range join (the quadratic path on hot keys)."""
     q = events.select("user_id", "ts").limit(5)
-    with pytest.raises(ValueError, match="auto.*sliding.*hops.*exact"):
+    with pytest.raises(ValueError, match="auto.*hops.*exact"):
         temporal_events(q, events, gb, tiebreak="event_id", strategy=strategy)

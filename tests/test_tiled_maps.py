@@ -31,7 +31,7 @@ def _rows(df, cols):
 def _compare(events, gb, cols):
     left = _left(events)
     a = temporal_events(left, events, gb, tiebreak="event_id", strategy="exact")
-    b = temporal_events(left, events, gb, tiebreak="event_id", strategy="sliding")
+    b = temporal_events(left, events, gb, tiebreak="event_id", strategy="auto")
     ra, rb = _rows(a, cols), _rows(b, cols)
     assert ra == rb, f"first diff: {next((x, y) for x, y in zip(ra, rb) if x != y)}"
 
